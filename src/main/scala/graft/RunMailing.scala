@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.operators.Checkpoints
 import graft.pipeline.{GraftConfig, MailingPipeline, RunLog}
 import graft.sinks.{Archiver, BrCsvSink}
 import graft.state.StateStore
@@ -10,10 +11,21 @@ import graft.state.StateStore
   * `main.py`: process → export per-product human CSVs + per-TIME-SLOT
   * robot CSVs (the `gerador_robo_mestre` grouping) → copy the run log
   * into the archive folder (`compressor.py:98`) → zip → persist run
-  * state. On failure the run saves FAILED state, logs the stack trace to
-  * the run log, prints the reference's operator-facing message
-  * (`main.py:21` MSG_COBRANCA_ERRO) and exits 1 — the operator never
-  * sees a raw traceback on stdout. Usage: `sbt "runMain graft.RunMailing
+  * state.
+  *
+  * Pass structure: the upstream shared by all three outputs (blocklist,
+  * dedup, debt aggregates, top-4 contacts, joins, flag) is materialized
+  * ONCE, then the human, robot and rejected writes each scan that copy.
+  * Every count comes from an action that already runs: the human and
+  * robot counts from an `Observation` on each write (what a re-read of
+  * the CSVs would count), the `blocklist`/`aggregates` stage counts from
+  * the materialization and `status_filter` from the first write — no
+  * re-read and no extra counting pass.
+  *
+  * On failure the run saves FAILED state, logs the stack trace to the
+  * run log, prints the reference's operator-facing message (`main.py:21`
+  * MSG_COBRANCA_ERRO) and exits 1 — the operator never sees a raw
+  * traceback on stdout. Usage: `sbt "runMain graft.RunMailing
   * <sfDir> <outDir> [config.ini]"` — the optional INI config drives
   * status sets, thresholds, cutoff and the product→slot groups. */
 object RunMailing {
@@ -34,28 +46,30 @@ object RunMailing {
     val log = new RunLog(s"$outDir/logs")
     try {
       log.info("=" * 30 + " INICIO DO PROCESSO DE AUTOMACAO " + "=" * 30)
-      val r = MailingPipeline.full(spark, sfDir, config)
+      val r = MailingPipeline.full(spark, sfDir, config, Checkpoints.materializeOnce)
 
       val human = BrCsvSink.polish(r.human,
         moneyCols = Seq("valorDivida"),
         idCols = Seq("CPF", "CONTATO_01", "CONTATO_02", "CONTATO_03", "CONTATO_04"),
         textCols = Seq("NOME_CLIENTE", "Cliente_Regulariza"))
-      BrCsvSink.writePartitioned(human, s"$outDir/human", "PRODUTO", sep = ";")
+      val nHuman = BrCsvSink.writePartitioned(human, s"$outDir/human", "PRODUTO", sep = ";")
       log.info(s"Exportacao humana concluida em $outDir/human")
 
       val robot = BrCsvSink.polish(r.robot, moneyCols = Seq("valorDivida"), idCols = Seq("CPF"))
-      if (config.slotGroups.nonEmpty)
-        BrCsvSink.writeBySlots(robot, col("PRODUTO"), config.slotGroups, s"$outDir/robot", sep = "|")
-      else
-        BrCsvSink.writePartitioned(robot, s"$outDir/robot", "PRODUTO", sep = "|")
+      val nRobot =
+        if (config.slotGroups.nonEmpty)
+          BrCsvSink.writeBySlots(robot, col("PRODUTO"), config.slotGroups, s"$outDir/robot", sep = "|")
+        else
+          BrCsvSink.writePartitioned(robot, s"$outDir/robot", "PRODUTO", sep = "|")
       log.info(s"Exportacao robo concluida em $outDir/robot")
 
       r.rejected.coalesce(1).write.mode("overwrite")
         .option("header", "true").option("sep", ";").csv(s"$outDir/rejected")
 
-      val nHuman = spark.read.option("header", "true").option("sep", ";").csv(s"$outDir/human").count()
-      val nRobot = spark.read.option("header", "true").option("sep", "|").csv(s"$outDir/robot").count()
-      val stageCounts = r.report.collect(r.human)
+      r.report.awaitAll()
+      val stageCounts = r.report.results
+      val missing = r.report.names.filterNot(stageCounts.map(_._1).toSet)
+      if (missing.nonEmpty) log.warn(s"Etapas sem contagem: ${missing.mkString(",")}")
       log.info(s"Contagens: human=$nHuman robot=$nRobot")
 
       // compressor.py:98 — the run log travels into the archived folder

@@ -34,8 +34,19 @@ object MailingPipeline {
 
   /** Config-driven form — status sets, thresholds, cutoff, priority order
     * and export columns all come from the [[GraftConfig]] (the reference's
-    * `config.ini` surface). */
-  def full(spark: SparkSession, sfDir: String, config: GraftConfig): Result = {
+    * `config.ini` surface). Every output stays one lazy plan over the
+    * source tables. */
+  def full(spark: SparkSession, sfDir: String, config: GraftConfig): Result =
+    full(spark, sfDir, config, identity[DataFrame])
+
+  /** As above, with `cut` applied to `flagged` — the last frame that the
+    * human, robot and rejected outputs all derive from. A caller that
+    * writes all three passes [[Checkpoints.materializeOnce]] so the shared
+    * upstream (blocklist, dedup, debt aggregates, top-4 contacts, joins)
+    * runs once instead of once per output; the `blocklist` and
+    * `aggregates` counts then fire during that cut. */
+  def full(spark: SparkSession, sfDir: String, config: GraftConfig,
+           cut: DataFrame => DataFrame): Result = {
     val report = new StageReport
     val customer = Tables.customer(spark, sfDir)
     val orders = Tables.orders(spark, sfDir)
@@ -77,8 +88,8 @@ object MailingPipeline {
       col("c_custkey") === col("contact_key"), "left").drop("contact_key")
 
     // Stage: conditional flag
-    val flagged = enriched.withColumn("Cliente_Regulariza",
-      when(col("ultima_fatura") < "1997-06-01", lit("SIM")).otherwise(lit("NÃO")))
+    val flagged = cut(enriched.withColumn("Cliente_Regulariza",
+      when(col("ultima_fatura") < "1997-06-01", lit("SIM")).otherwise(lit("NÃO"))))
 
     // Stage: status filter with rejected side-output
     val (kept, rejected) = Blocklist.filterWithRejects(flagged, col("c_mktsegment"), config.statusesToRemove)

@@ -26,6 +26,8 @@ final class RunLog(logDir: String, now: Instant = Instant.now()) {
 
   def info(msg: String): Unit = write("INFO", msg)
 
+  def warn(msg: String): Unit = write("WARNING", msg)
+
   def error(msg: String, e: Throwable = null): Unit = {
     write("CRITICAL", msg)
     if (e != null) {

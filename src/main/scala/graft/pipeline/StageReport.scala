@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.{DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
 import scala.collection.mutable
 
@@ -26,6 +26,9 @@ final class StageReport {
     df.observe(obs, count(lit(1)).as("rows"))
   }
 
+  /** Every tracked stage name, in tracking order. */
+  def names: Seq[String] = stages.toSeq.map(_._1)
+
   /** Counts for every stage whose observing action has already run, in
     * tracking order. */
   def results: Seq[(String, Long)] =
@@ -34,12 +37,6 @@ final class StageReport {
       o.future.value.flatMap(_.toOption).map(r => n -> r.getAs[Long]("rows"))
     }
 
-  /** Run one Dataset action over `df` (so its observes fire — Observation
-    * completion rides the SQL listener bus, which a bare `toRdd` action
-    * would bypass), wait briefly for the async listener bus to deliver,
-    * then return all available stage counts. Stages materialized by
-    * earlier actions (e.g. upstream of a checkpoint) are included; a
-    * stage that never ran is omitted rather than blocking forever. */
   /** Wait (bounded) for observed metrics still in flight on the ASYNC SQL
     * listener bus. One shared deadline: completed futures return
     * instantly, and a stage that never materialized can burn the budget
@@ -56,9 +53,31 @@ final class StageReport {
     }
   }
 
+  /** Run one Dataset action over `df` (so its observes fire — Observation
+    * completion rides the SQL listener bus, which a bare `toRdd` action
+    * would bypass), wait briefly for the async listener bus to deliver,
+    * then return all available stage counts. Stages materialized by
+    * earlier actions (e.g. upstream of a checkpoint) are included; a
+    * stage that never ran is omitted rather than blocking forever. */
   def collect(df: DataFrame, waitSecs: Int = 10): Seq[(String, Long)] = {
     df.count()
     awaitAll(waitSecs)
     results
   }
+}
+
+object StageReport {
+
+  /** The metrics row of an [[Observation]] whose action has already run,
+    * waited for with a bounded deadline (delivery rides the asynchronous
+    * SQL listener bus). A missing row throws instead of blocking, so a
+    * caller that needs the value fails with a clear error rather than
+    * hanging the way a bare `obs.get` would. */
+  def awaitObserved(obs: Observation, what: String, waitSecs: Int = 10): Row =
+    try scala.concurrent.Await.result(obs.future, scala.concurrent.duration.Duration(waitSecs, "s"))
+    catch {
+      case _: java.util.concurrent.TimeoutException =>
+        throw new IllegalStateException(
+          s"observed metrics for $what did not arrive within $waitSecs s")
+    }
 }

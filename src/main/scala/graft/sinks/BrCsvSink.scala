@@ -1,8 +1,9 @@
 package graft.sinks
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Observation, Row}
 import org.apache.spark.sql.functions._
 import graft.functions.{BrFormats, TextClean}
+import graft.pipeline.StageReport
 
 /** Partitioned CSV export with the reference's output conventions:
   * per-product files, `;` (human) / `|` (robot) separators, BR money/date
@@ -44,6 +45,15 @@ object BrCsvSink {
       .map(first => df.withColumnRenamed(first, "\uFEFF" + first))
       .getOrElse(df)
 
+  /** Run `write` over `df` with a row-count [[Observation]] on the exact
+    * frame handed to `.write`, and return that count: it is what a
+    * re-read of the output would count, taken from the write itself. */
+  private def countedWrite(df: DataFrame, out: String)(write: DataFrameWriter[Row] => Unit): Long = {
+    val obs = new Observation()
+    write(df.observe(obs, count(lit(1)).as("rows")).write)
+    StageReport.awaitObserved(obs, s"the CSV write to $out").getAs[Long]("rows")
+  }
+
   /** Write one directory of CSV part-files per `partitionCol` value
     * (`partitionBy` → files land under `<out>/<col>=<value>/`), executed
     * fully distributed — no per-product driver loop like the reference.
@@ -61,9 +71,11 @@ object BrCsvSink {
     * a non-blank value that scrubs to empty becomes `_` (the reference
     * emits a nameless `mailing__<date>.csv`; an empty partition value
     * would round-trip as NULL). Pass `sanitizeNames = false` to keep raw
-    * values with Spark's escaping and no row skipped. */
+    * values with Spark's escaping and no row skipped.
+    *
+    * Returns the number of rows written, null/blank skips excluded. */
   def writePartitioned(df: DataFrame, out: String, partitionCol: String, sep: String = ";",
-                       bom: Boolean = true, sanitizeNames: Boolean = true): Unit = {
+                       bom: Boolean = true, sanitizeNames: Boolean = true): Long = {
     val scrubbed = TextClean.safeFileName(col(partitionCol))
     val sanitized =
       if (sanitizeNames)
@@ -75,14 +87,14 @@ object BrCsvSink {
     // the file body, so the BOM must go on the first IN-FILE column
     val (part, rest) = sanitized.columns.partition(_ == partitionCol)
     val ordered = sanitized.select((rest ++ part).map(col).toIndexedSeq: _*)
-    (if (bom && rest.nonEmpty) withBomHeader(ordered) else ordered).write
+    countedWrite(if (bom && rest.nonEmpty) withBomHeader(ordered) else ordered, out)(_
       .mode("overwrite")
       .partitionBy(partitionCol)
       .option("header", "true")
       .option("sep", sep)
       .option("emptyValue", "")
       .option("nullValue", "")
-      .csv(out)
+      .csv(out))
   }
 
   /** Robot export grouped by TIME SLOT: many products map to one slot
@@ -97,9 +109,11 @@ object BrCsvSink {
     * (the reference's per-slot `isin` loop matches each slot
     * independently), expressed here as an explode over the matching slots.
     * Robot files use the `|` separator and, like every reference CSV,
-    * the `utf-8-sig` signature (`gerador_robo_mestre.py:138`). */
+    * the `utf-8-sig` signature (`gerador_robo_mestre.py:138`).
+    *
+    * Returns the number of rows written: one per matching slot. */
   def writeBySlots(df: DataFrame, productCol: Column, slotGroups: Map[String, Seq[String]],
-                   out: String, sep: String = "|", bom: Boolean = true): Unit = {
+                   out: String, sep: String = "|", bom: Boolean = true): Long = {
     require(slotGroups.nonEmpty, "writeBySlots needs at least one slot group")
     // One entry per slot whose group contains the product; explode drops
     // rows whose array is empty (product in no group) and duplicates rows
@@ -108,14 +122,13 @@ object BrCsvSink {
       when(productCol.isin(products: _*), lit(s))
     }: _*)
     val slotted = df.withColumn("slot", explode(filter(matching, _.isNotNull)))
-    (if (bom) withBomHeader(slotted) else slotted)
-      .write
+    countedWrite(if (bom) withBomHeader(slotted) else slotted, out)(_
       .mode("overwrite")
       .partitionBy("slot")
       .option("header", "true")
       .option("sep", sep)
       .option("emptyValue", "")
       .option("nullValue", "")
-      .csv(out)
+      .csv(out))
   }
 }

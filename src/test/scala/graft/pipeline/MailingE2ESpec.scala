@@ -132,6 +132,33 @@ class MailingE2ESpec extends SparkSpec {
     assert(logText.contains("PROCESSO CONCLUIDO COM SUCESSO"))
   }
 
+  test("RunMailing.execute with a cutoff above every debt writes and counts no human row") {
+    val out = java.nio.file.Files.createTempDirectory("mailing-nohuman").toString
+    val state = new StateStore(s"$out/state.json")
+    val config = GraftConfig.default.copy(humanCutoff = 1e15,
+      slotGroups = ListMap("08HRS" -> Seq("BUILDING", "MACHINERY"),
+        "09HRS" -> Seq("HOUSEHOLD"), "10HRS" -> Seq("FURNITURE")))
+    val s = graft.RunMailing.execute(ss, sfDir, out, config, state)
+    assert(s.human == 0L && csvRowCount(s"$out/human", ";") == 0L)
+    assert(s.robot > 0 && s.robot == csvRowCount(s"$out/robot", "|"))
+    assert(state.status.contains("COMPLETED") && state.lastMetrics("human") == 0L)
+    assert(s.stages.map(_._1) == Seq("blocklist", "aggregates", "status_filter"))
+  }
+
+  test("RunMailing.execute without slot groups writes the robot per product and counts it") {
+    val out = java.nio.file.Files.createTempDirectory("mailing-noslots").toString
+    val state = new StateStore(s"$out/state.json")
+    val s = graft.RunMailing.execute(ss, sfDir, out,
+      GraftConfig.default.copy(humanCutoff = 1500000.0), state)
+    assert(s.human > 0 && s.human == csvRowCount(s"$out/human", ";"))
+    assert(s.robot > 0 && s.robot == csvRowCount(s"$out/robot", "|"))
+    val robotDirs = new java.io.File(s"$out/robot").listFiles().filter(_.isDirectory).map(_.getName)
+    assert(robotDirs.nonEmpty && robotDirs.forall(_.startsWith("PRODUTO=")),
+      s"the robot export must be partitioned by product, got ${robotDirs.toSeq}")
+    assert(state.lastMetrics == Map("human" -> s.human, "robot" -> s.robot,
+      "zip_entries" -> s.zipEntries.toLong))
+  }
+
   test("RunMailing.execute on failure saves FAILED state and logs the stack trace") {
     val out = java.nio.file.Files.createTempDirectory("mailing-fail").toString
     val state = new StateStore(s"$out/state.json")

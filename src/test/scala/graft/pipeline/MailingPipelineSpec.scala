@@ -55,4 +55,12 @@ class MailingPipelineSpec extends SparkSpec {
     assert(counts("aggregates") == 135L)
     assert(counts("status_filter") > 0L && counts("status_filter") < 135L)
   }
+
+  test("awaitObserved fails fast, with a clear error, on metrics that never arrive") {
+    val never = new org.apache.spark.sql.Observation()
+    val t0 = System.nanoTime()
+    val e = intercept[IllegalStateException](StageReport.awaitObserved(never, "a write that never ran", waitSecs = 1))
+    assert(e.getMessage.contains("a write that never ran"))
+    assert(System.nanoTime() - t0 < 10L * 1000 * 1000 * 1000, "the wait must be bounded")
+  }
 }

@@ -93,6 +93,29 @@ class SinksStateSpec extends SparkSpec {
     assert(back2.count() == 3) // EPB twice + ERO once; others unmapped
   }
 
+  test("BrCsvSink writers return the row count a re-read of their output finds") {
+    val df = Seq[(String, Int)](("EPB", 1), ("EPB", 2), ("ERO", 3), (null, 4), ("  ", 5), ("ZZZ", 6))
+      .toDF("PRODUTO", "v")
+    def dir(name: String) = Files.createTempDirectory(name).toString + "/out"
+    // EPB sits in two slot groups, so the explode writes each EPB row twice
+    val slots = Map("08HRS" -> Seq("EPB"), "09HRS" -> Seq("EPB", "ERO"))
+    val bySlot = dir("count-slots")
+    val nSlots = BrCsvSink.writeBySlots(df, col("PRODUTO"), slots, bySlot)
+    assert(nSlots == 5 && nSlots == csvRowCount(bySlot, "|"))
+    // null and blank partition values are dropped before the write
+    val byProduct = dir("count-parts")
+    val nParts = BrCsvSink.writePartitioned(df, byProduct, "PRODUTO")
+    assert(nParts == 4 && nParts == csvRowCount(byProduct, ";"))
+    // an empty input writes, and counts, nothing
+    val empty = df.filter(lit(false))
+    val emptyParts = dir("count-empty-parts")
+    assert(BrCsvSink.writePartitioned(empty, emptyParts, "PRODUTO") == 0L)
+    assert(csvRowCount(emptyParts, ";") == 0L)
+    val emptySlots = dir("count-empty-slots")
+    assert(BrCsvSink.writeBySlots(empty, col("PRODUTO"), slots, emptySlots) == 0L)
+    assert(csvRowCount(emptySlots, "|") == 0L)
+  }
+
   test("Archiver zips a directory and can remove the source") {
     val dir = Files.createTempDirectory("arch")
     Files.write(dir.resolve("a.csv"), "1;2\n".getBytes)
