@@ -1,21 +1,18 @@
 package graft
 
-import org.apache.spark.sql.{Observation, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.operators.Sampling
 import graft.pipeline.{CorpusPipeline, StageReport}
 
 /** End-to-end training-corpus preparation run — the LLM-data sibling of
   * [[RunMailing]]: documents in, deduplicated + leakage-safe-split corpus
   * out, written as split-partitioned parquet (the standard
   * `corpus/split=train|valid|test/` training layout) with per-stage audit
-  * counts. The per-split row and token totals ride an `Observation` on
-  * the corpus write itself, so the output is never re-read to count it.
-  * Usage: `sbt "runMain graft.RunCorpus <sfDir> <outDir>"`. */
+  * counts. Usage: `sbt "runMain graft.RunCorpus <sfDir> <outDir>"`. */
 object RunCorpus {
 
-  /** `splits` holds (split, rows, whitespace tokens) for every non-empty
-    * split, sorted by split name. */
+  /** `splits` holds (split, rows, whitespace tokens) for every split the
+    * written corpus contains, sorted by split name. */
   final case class Summary(stages: Seq[(String, Long)], splits: Seq[(String, Long, Long)])
 
   /** The run against a CALLER-OWNED session, separable from `main` so a
@@ -25,22 +22,15 @@ object RunCorpus {
     val report = new StageReport
     val corpus = CorpusPipeline.prepare(docs, col("doc_id"), col("text"),
       report = Some(report))
-    val names = Sampling.SplitNames.sorted
-    val perSplit = names.flatMap { s =>
-      val in = col("split") === s
-      Seq(count_if(in).as(s"${s}_n"),
-        coalesce(sum(when(in, col("ws_tokens"))), lit(0L)).as(s"${s}_tokens"))
-    }
-    val obs = new Observation()
-    corpus.observe(obs, perSplit.head, perSplit.tail: _*)
-      .write.mode("overwrite").partitionBy("split").parquet(s"$outDir/corpus")
-    val m = StageReport.awaitObserved(obs, s"the corpus write to $outDir/corpus")
-    val splits = names.map(s => (s, m.getAs[Long](s"${s}_n"), m.getAs[Long](s"${s}_tokens")))
-      .filter(_._2 > 0)
+    corpus.write.mode("overwrite").partitionBy("split").parquet(s"$outDir/corpus")
+    val bySplit = spark.read.parquet(s"$outDir/corpus")
+      .groupBy("split").agg(count(lit(1)).as("n"), sum("ws_tokens").as("tokens"))
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+      .sortBy(_._1)
     // stage observes fired on the write action; their completion rides
     // the ASYNC listener bus — wait it out (bounded) instead of racing it
     report.awaitAll()
-    Summary(report.results, splits)
+    Summary(report.results, bySplit.toSeq)
   }
 
   def main(args: Array[String]): Unit = {

@@ -37,9 +37,6 @@ object Sampling {
     TopK.topKPerKeyNative(df, Seq(stratumCol),
       Seq(md5(idCol.cast("string")).asc, idCol.asc), perStratum)
 
-  /** Every label [[withSplit]] assigns. */
-  val SplitNames: Seq[String] = Seq("train", "valid", "test")
-
   /** train/valid/test assignment by bucket range: `trainPct`% → train, next
     * `validPct`% → valid, rest → test. Duplicate ids always co-assign, so
     * near-dup leakage across splits can be controlled upstream by splitting

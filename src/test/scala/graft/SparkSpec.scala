@@ -9,9 +9,6 @@ import scala.jdk.CollectionConverters._
   * `import ss.implicits._` via the stable `ss` val. */
 object SparkSpec {
   lazy val session: SparkSession = GraftSession.local("graft-test", 4)
-
-  /** The generated test tables at scale factor `sf`: `~/testdata/sf<sf>`. */
-  def sfDir(sf: String): String = s"${sys.props("user.home")}/testdata/sf$sf"
 }
 
 abstract class SparkSpec extends AnyFunSuite {

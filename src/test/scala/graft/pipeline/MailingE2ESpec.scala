@@ -5,8 +5,15 @@ import graft.operators.Audit
 import graft.sinks.{Archiver, BrCsvSink}
 import graft.sources.Tables
 import graft.state.StateStore
+import org.apache.spark.sql.Observation
+import org.apache.spark.sql.catalyst.plans.logical.{CollectMetrics, LogicalPlan}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+import java.nio.file.{Files, Path, Paths}
 import scala.collection.immutable.ListMap
+import scala.jdk.CollectionConverters._
 
 /** The reference's `main.py` flow as ONE green case: pipeline → per-product
   * human export + per-slot robot export → laudo-style forbidden-value audit
@@ -20,6 +27,11 @@ class MailingE2ESpec extends SparkSpec {
   import ss.implicits._
 
   private val sfDir = "/root/testdata/sf0.001"
+
+  /** The three-slot daily config the `RunMailing.execute` cases share. */
+  private val slotConfig = GraftConfig.default.copy(humanCutoff = 1500000.0,
+    slotGroups = ListMap("08HRS" -> Seq("BUILDING", "MACHINERY"),
+      "09HRS" -> Seq("HOUSEHOLD"), "10HRS" -> Seq("FURNITURE")))
 
   test("mailing chain: pipeline -> exports -> audit -> archive -> state") {
     val out = java.nio.file.Files.createTempDirectory("mailing-e2e").toString
@@ -135,10 +147,7 @@ class MailingE2ESpec extends SparkSpec {
   test("RunMailing.execute with a cutoff above every debt writes and counts no human row") {
     val out = java.nio.file.Files.createTempDirectory("mailing-nohuman").toString
     val state = new StateStore(s"$out/state.json")
-    val config = GraftConfig.default.copy(humanCutoff = 1e15,
-      slotGroups = ListMap("08HRS" -> Seq("BUILDING", "MACHINERY"),
-        "09HRS" -> Seq("HOUSEHOLD"), "10HRS" -> Seq("FURNITURE")))
-    val s = graft.RunMailing.execute(ss, sfDir, out, config, state)
+    val s = graft.RunMailing.execute(ss, sfDir, out, slotConfig.copy(humanCutoff = 1e15), state)
     assert(s.human == 0L && csvRowCount(s"$out/human", ";") == 0L)
     assert(s.robot > 0 && s.robot == csvRowCount(s"$out/robot", "|"))
     assert(state.status.contains("COMPLETED") && state.lastMetrics("human") == 0L)
@@ -157,6 +166,107 @@ class MailingE2ESpec extends SparkSpec {
       s"the robot export must be partitioned by product, got ${robotDirs.toSeq}")
     assert(state.lastMetrics == Map("human" -> s.human, "robot" -> s.robot,
       "zip_entries" -> s.zipEntries.toLong))
+  }
+
+  private def listDir(p: Path): Seq[Path] =
+    scala.util.Using.resource(Files.list(p))(_.iterator().asScala.toList).sortBy(_.toString)
+
+  /** md5 of one export directory's CSV content: the header (identical in
+    * every part file) followed by the sorted data lines, so the digest
+    * does not depend on how rows were spread over part files. The
+    * `Data_de_Importacao` field (`current_date`) is blanked first, as
+    * q153 leaves it out of its hash. */
+  private def csvDigest(dir: Path, sep: String): String = {
+    val files = listDir(dir).filter(_.getFileName.toString.endsWith(".csv"))
+    val texts = files.map(f => Files.readAllLines(f, java.nio.charset.StandardCharsets.UTF_8).asScala.toSeq)
+    val headers = texts.flatMap(_.headOption).distinct
+    assert(headers.size == 1, s"$dir: part files disagree on the header: $headers")
+    val header = headers.head
+    val quoted = java.util.regex.Pattern.quote(sep)
+    val dateIdx = header.stripPrefix("\uFEFF").split(quoted, -1).indexOf("Data_de_Importacao")
+    val rows = texts.flatMap(_.drop(1)).map { line =>
+      if (dateIdx < 0) line
+      else line.split(quoted, -1).updated(dateIdx, "<data>").mkString(sep)
+    }.sorted
+    val md = java.security.MessageDigest.getInstance("MD5")
+    md.digest((header +: rows).mkString("\n").getBytes("UTF-8")).map("%02x".format(_)).mkString
+  }
+
+  /** Zip entry names with the per-write part-file UUID and the run-log
+    * timestamp blanked. */
+  private def zipNames(zip: String): Seq[String] = {
+    val zf = new java.util.zip.ZipFile(zip)
+    try zf.entries().asScala.map(_.getName
+      .replaceAll("[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}", "<uuid>")
+      .replaceAll("automacao_[0-9_-]+\\.log", "automacao_<ts>.log")).toSeq.sorted
+    finally zf.close()
+  }
+
+  /** One run, checked two ways. Its outputs are pinned to the values the
+    * fully lazy pipeline (one plan per output) produced: every export
+    * directory's CSV lines, the summary and stage counts and the zip entry
+    * names. And its pass structure is guarded: a `QueryExecutionListener`
+    * sees one SQL execution read `orders` and at most five in total. */
+  test("RunMailing.execute runs the upstream once and its outputs are pinned") {
+    val marker = "run-mailing-guard-marker"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    def isMarker(p: LogicalPlan) = p.exists {
+      case c: CollectMetrics => c.name == marker
+      case _ => false
+    }
+    val listener = new QueryExecutionListener {
+      private def record(qe: QueryExecution): Unit =
+        if (isMarker(qe.logical)) markerSeen.countDown() else seen.add(qe)
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = record(qe)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = record(qe)
+    }
+    val out = Files.createTempDirectory("mailing-pin").toString
+    ss.listenerManager.register(listener)
+    val s = try {
+      val s = graft.RunMailing.execute(ss, sfDir, out, slotConfig, new StateStore(s"$out/state.json"))
+      // Listener events arrive in order on an asynchronous bus: once the
+      // marker action after the run is delivered, every one of the run's
+      // executions has been too.
+      ss.range(1).observe(Observation(marker), count(lit(1))).collect()
+      assert(markerSeen.await(30, java.util.concurrent.TimeUnit.SECONDS),
+        "the marker execution never reached the listener")
+      s
+    } finally ss.listenerManager.unregister(listener)
+
+    val runs = seen.asScala.toSeq
+    def readsOrders(qe: QueryExecution) = qe.analyzed.collectWithSubqueries {
+      case l: LogicalRelation => l.relation
+    }.exists {
+      case h: HadoopFsRelation => h.location.rootPaths.exists(_.getName == "orders.parquet")
+      case _ => false
+    }
+    val ordersReads = runs.count(readsOrders)
+    val clue = s"$ordersReads of ${runs.size} SQL executions read orders"
+    assert(ordersReads == 1, s"only the materialized upstream may read orders: $clue")
+    assert(runs.size <= 5, s"at most 5 SQL executions per run: $clue")
+
+    def digests(sub: String, sep: String) =
+      listDir(Paths.get(out, sub)).filter(Files.isDirectory(_))
+        .map(d => s"$sub/${d.getFileName}" -> csvDigest(d, sep))
+    assert((digests("human", ";") ++ digests("robot", "|") :+
+      ("rejected" -> csvDigest(Paths.get(out, "rejected"), ";"))).toMap == Map(
+      "human/PRODUTO=BUILDING" -> "b1240d0fa67a68618a52ac2563931bd7",
+      "human/PRODUTO=FURNITURE" -> "0ca38a1f391766cb0fec31f3fc639e35",
+      "human/PRODUTO=HOUSEHOLD" -> "e007d5cb047e2d888d577ef438949f37",
+      "human/PRODUTO=MACHINERY" -> "41d752fab9781dafa61a8352fcbf4781",
+      "robot/slot=08HRS" -> "9f9dcf55497615ee42b73b000131728c",
+      "robot/slot=09HRS" -> "4693270740f867f2deb43a06c3a28a1e",
+      "robot/slot=10HRS" -> "05d7084d9161e7d2434af39c4f94d898",
+      "rejected" -> "f1de97a50aba1e644e80a1e81f7f1f76"))
+    assert((s.human, s.robot, s.zipEntries) == ((94L, 18L, 11)))
+    assert(new StateStore(s"$out/state.json").lastMetrics ==
+      Map("human" -> 94L, "robot" -> 18L, "zip_entries" -> 11L))
+    assert(s.stages == Seq("blocklist" -> 135L, "aggregates" -> 135L, "status_filter" -> 112L))
+    val products = Seq("BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY")
+    assert(zipNames(s"$out/mailing_human.zip") == (Seq("._SUCCESS.crc", "_SUCCESS", "automacao_<ts>.log") ++
+      products.flatMap(p => Seq(s"PRODUTO=$p/.part-00000-<uuid>.c000.csv.crc",
+        s"PRODUTO=$p/part-00000-<uuid>.c000.csv"))).sorted)
   }
 
   test("RunMailing.execute on failure saves FAILED state and logs the stack trace") {
