@@ -8,20 +8,20 @@ import org.apache.spark.sql.functions._
   * Spark column arithmetic (duplicate-word fraction, duplicate-n-gram
   * fraction, modal-n-gram share).
   *
-  * Two shapes, chosen by the cost model of the signal itself:
+  * Every signal is a per-row array expression over the doc's own tokens
+  * (split / array_distinct / size / sort + one fold): NARROW, zero
+  * shuffle, one scan. At 100 TB this is the shape you want for any signal
+  * that only needs per-doc counts. (Higher-order array functions are
+  * interpreted expressions, not codegen'd, but they never break the stage
+  * — the plan stays a single Project over the scan.)
   *
-  *  - `repetitionSignals` — pure per-row array expressions (split /
-  *    array_distinct / size): NARROW, zero shuffle, one scan. At 100 TB this
-  *    is the shape you want for every signal that only needs per-doc distinct
-  *    counts. (Higher-order array functions are interpreted expressions, not
-  *    codegen'd, but they never break the stage — the plan stays a single
-  *    Project over the scan.)
-  *
-  *  - `topNgramFracQ` — the modal-gram share needs a per-doc argmax over gram
-  *    counts; doing that inside one row is O(len²) string compares, which a
-  *    100k-token document turns into a hot spot. So it goes through
-  *    explode → groupBy(doc, gram) → groupBy(doc): two map-side-combinable
-  *    aggregations, both keyed by doc id, O(len) per doc.
+  * The modal-gram share (`modalGramFracQ`) needs a per-doc argmax over
+  * gram counts. Sorting the doc's grams puts equal grams next to each
+  * other, so one fold over the sorted array that tracks the longest equal
+  * run finds it: O(len log len) string compares in-row, no pairwise
+  * compare and no per-gram state — cheaper than exploding the grams
+  * through groupBy(doc, gram) → groupBy(doc), which pays two shuffles for
+  * a value that never leaves the row.
   *
   * All fractions are emitted ⌊frac·10⁴⌋-quantized (`_q` suffix): the inputs
   * to the division are exact integers, so the double result is bit-identical
@@ -59,32 +59,51 @@ object Repetition {
         * lit(10000)).cast("long"))
       .otherwise(lit(0L))
 
+  /** Modal-gram share of a gram array, ⌊max count · 10⁴ / size⌋: the
+    * fraction of the array occupied by its single most frequent element
+    * (Gopher's "top n-gram fraction"). NULL for an empty or null array —
+    * a doc with no grams has no modal gram.
+    *
+    * In-row: `sort_array` groups equal grams, then one `aggregate` fold
+    * carries (previous gram, current run, longest run) — O(len log len).
+    * The arithmetic is the q56 oracle's (integer count × 10000.0 /
+    * integer total, floored), so values are bit-identical to it.
+    *
+    * PASS A BOUND COLUMN (see [[wordNgrams]]): `grams` is referenced three
+    * times, and an expression tree would be re-evaluated at each. */
+  def modalGramFracQ(grams: Column): Column = {
+    val init = struct(lit(null).cast("string").as("prev"), lit(0).as("run"), lit(0).as("best"))
+    val longestRun = aggregate(sort_array(grams), init, (acc, g) => {
+      val run = when(acc.getField("prev") === g, acc.getField("run") + 1).otherwise(lit(1))
+      struct(g.as("prev"), run.as("run"), greatest(acc.getField("best"), run).as("best"))
+    }, acc => acc.getField("best"))
+    when(size(grams) > 0, floor(longestRun * lit(10000.0) / size(grams)).cast("long"))
+  }
+
   /** Per-doc narrow repetition frame: (id, n_tokens, dup_word_frac_q,
-    * dup_bigram_frac_q). One Project over the scan — no shuffle. */
+    * dup_bigram_frac_q, top_bigram_frac_q). One Project over the scan — no
+    * shuffle. Docs with fewer than two tokens read 0 in both bigram
+    * signals. */
   def repetitionSignals(df: DataFrame, id: Column, text: Column): DataFrame =
     df.select(id.as("id"), wordTokens(text).as("__toks"))
+      .select(col("id"), col("__toks"), wordNgrams(col("__toks"), 2).as("__bigrams"))
       .select(
         col("id"),
         size(col("__toks")).cast("long").as("n_tokens"),
         dupFracQ(col("__toks")).as("dup_word_frac_q"),
-        dupFracQ(wordNgrams(col("__toks"), 2)).as("dup_bigram_frac_q"))
+        dupFracQ(col("__bigrams")).as("dup_bigram_frac_q"),
+        coalesce(modalGramFracQ(col("__bigrams")), lit(0L)).as("top_bigram_frac_q"))
 
-  /** Modal n-gram share per doc, ⌊·10⁴⌋-quantized: the fraction of a doc's
-    * n-grams occupied by its single most frequent n-gram (Gopher's
-    * "top n-gram fraction"). Docs with fewer than n tokens are absent from
+  /** Modal n-gram share per doc, ⌊·10⁴⌋-quantized ([[modalGramFracQ]] over
+    * the doc's word n-grams). Docs with fewer than n tokens are absent from
     * the result (they have no n-grams) — callers join and coalesce.
     *
-    * Scale shape: explode → two hash aggregations, both map-side combined;
-    * the second groups a frame that is already one row per (doc, distinct
-    * gram), so the shuffled volume is bounded by the doc's vocabulary, not
-    * its length. */
+    * Shape: one Project and one filter over the scan, no shuffle. */
   def topNgramFracQ(df: DataFrame, id: Column, text: Column, n: Int): DataFrame =
     df.select(id.as("id"), wordTokens(text).as("__toks"))
-      .select(col("id"), explode(wordNgrams(col("__toks"), n)).as("gram"))
-      .groupBy("id", "gram").agg(count(lit(1)).as("cnt"))
-      .groupBy("id")
-      .agg(floor(max("cnt") * lit(10000.0) / sum("cnt")).cast("long")
-        .as(s"top_${n}gram_frac_q"))
+      .where(size(col("__toks")) >= n)
+      .select(col("id"), wordNgrams(col("__toks"), n).as("__grams"))
+      .select(col("id"), modalGramFracQ(col("__grams")).as(s"top_${n}gram_frac_q"))
 
   /** Within-document first-occurrence segment dedup — the REPAIR sibling of
     * the detection signals above: split on `sep`, keep each segment's FIRST

@@ -7,41 +7,31 @@ import graft.functions.TextClean
 /** Blocklist / exclusion operators.
   *
   * The blocklist side is usually tiny relative to the main table (it is the
-  * output of a HAVING over the disposition log), so the threshold operator
-  * broadcasts it — but only after MEASURING it: a pathological disposition
-  * log can put most of the customer base over the threshold, and an
-  * unconditional broadcast of that would OOM the driver at corpus scale.
-  * Same count-gate pattern as `NearDup.minHashLshPairs`.
+  * output of a HAVING over the disposition log), and the threshold
+  * operator leaves the join strategy to the planner: with no hint, Spark
+  * broadcasts it when the estimated size is under the broadcast threshold,
+  * and AQE re-decides from the MEASURED size once the log aggregate has
+  * run — so a pathological log that puts most of the customer base over
+  * the threshold goes through the shuffle path instead of an oversized
+  * broadcast. Building the frame runs no job.
   */
 object Blocklist {
 
   /** Remove rows whose key accumulated ≥ `threshold` critical statuses in the
     * log. Ref: `/root/reference/src/processing_pipeline.py:64-90`
     * (`_remover_clientes_proibidos`): count critical statuses per client,
-    * drop clients at/over the threshold via anti-join.
-    *
-    * @param broadcastLimit broadcast the blocked-key set only when its
-    *   measured row count is at or below this limit (one extra cheap job
-    *   over the log aggregate); above it the anti-join goes through the
-    *   shuffle path and AQE decides. Default 1M keys ≈ tens of MB as a
-    *   HashedRelation — safely inside a default-sized driver; anything
-    *   bigger belongs on the shuffle path anyway. */
+    * drop clients at/over the threshold via anti-join. */
   def removeByStatusThreshold(
       main: DataFrame, mainKey: Column,
       log: DataFrame, logKey: Column, statusCol: Column,
-      criticalStatuses: Seq[String], threshold: Int,
-      broadcastLimit: Long = 1000000L): DataFrame = {
+      criticalStatuses: Seq[String], threshold: Int): DataFrame = {
     val blocked = log
       .filter(TextClean.normKey(statusCol).isin(criticalStatuses.map(_.toLowerCase): _*))
       .groupBy(logKey.as("__blocked_key"))
       .agg(count(lit(1)).as("__n"))
       .filter(col("__n") >= threshold)
       .select("__blocked_key")
-    // The gate count re-runs the log aggregation once for the join; that
-    // aggregation is map-side-combined and output-bounded by the offender
-    // count, so the re-scan is cheap relative to an ungated driver OOM.
-    val hinted = if (blocked.count() <= broadcastLimit) broadcast(blocked) else blocked
-    main.join(hinted, mainKey === col("__blocked_key"), "left_anti")
+    main.join(blocked, mainKey === col("__blocked_key"), "left_anti")
   }
 
   /** Split rows into (kept, rejected-with-reason) by a status set, after

@@ -42,36 +42,46 @@ object DedupEval {
     * shows what one threshold did; this shows the whole dial), and the
     * classic way an over-aggressive dedup is caught early.
     *
-    * ONE pair computation at the loosest threshold, then the per-
-    * threshold rollup is pure arithmetic over the (tiny) pair frame:
-    * pairs × |thresholds| exploded rows, two map-side-combinable aggs —
-    * never a re-shingle per threshold. Thresholds compare at BASIS
-    * POINTS of the 4-decimal `jaccard` (an integer both engines derive
-    * identically from the rounded double — the L4 oracle convention), so
-    * the curve is hash-exact cross-engine.
+    * ONE pair computation at the loosest threshold, consumed once: each
+    * pair becomes its two endpoint ids carrying the pair's `j_bp`, one
+    * `groupBy(id)` takes the doc's best `j_bp` and its per-threshold
+    * pair count (`count(j_bp >= t)`, one column per threshold), and one
+    * global aggregate reads every dial off those columns —
+    * `n_pairs(t) = Σ c_t / 2` (each pair has two endpoints) and
+    * `n_docs(t) = count(max_j >= t)` (a doc is touched iff its best pair
+    * clears t). The answer-every-threshold-from-one-structure idea of
+    * Continuously Adaptive Similarity Search (SIGMOD 2020): no threshold
+    * spine join, no per-threshold copy of the pairs, never a re-shingle
+    * per threshold. Thresholds compare at BASIS POINTS of the 4-decimal
+    * `jaccard` (an integer both engines derive identically from the
+    * rounded double — the L4 oracle convention), so the curve is
+    * hash-exact cross-engine.
     *
-    * Output: (threshold_bp, n_pairs, n_docs), one row per threshold,
+    * Output: (threshold_bp, n_pairs, n_docs), one row per DISTINCT
+    * threshold at basis-point resolution (0.5 and 0.50001 are one dial),
     * including thresholds that keep zero pairs. */
   def thresholdCurve(df: DataFrame, idCol: Column, textCol: Column,
                      k: Int, thresholds: Seq[Double],
                      maxDocFreq: Long = 0L): DataFrame = {
     require(thresholds.nonEmpty, "need at least one threshold")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val thrBp = thresholds.map(t => math.round(t * 1e4)).sorted
+    val thrBp = thresholds.map(t => math.round(t * 1e4)).distinct.sorted
     val pairs = NearDup.ngramJaccardPairs(df, idCol, textCol, k,
         threshold = thrBp.head / 1e4, maxDocFreq = maxDocFreq)
       .select(col("id_a"), col("id_b"),
         round(col("jaccard") * 1e4).cast("long").as("j_bp"))
-    val spine = thrBp.toDF("threshold_bp")
-    val hit = pairs.join(broadcast(spine), col("j_bp") >= col("threshold_bp"))
-    val perPair = hit.groupBy("threshold_bp").agg(count(lit(1)).as("n_pairs"))
-    val perDoc = hit
-      .select(col("threshold_bp"), explode(array(col("id_a"), col("id_b"))).as("id"))
-      .distinct()
-      .groupBy("threshold_bp").agg(count(lit(1)).as("n_docs"))
-    spine.join(perPair, Seq("threshold_bp"), "left")
-      .join(perDoc, Seq("threshold_bp"), "left")
-      .na.fill(0L, Seq("n_pairs", "n_docs"))
+    val perDoc = pairs
+      .select(explode(array(col("id_a"), col("id_b"))).as("id"), col("j_bp"))
+      .groupBy("id")
+      .agg(max("j_bp").as("max_j"),
+        thrBp.map(t => count(when(col("j_bp") >= t, 1)).as(s"c_$t")): _*)
+    val totals = thrBp.flatMap(t => Seq(
+      sum(col(s"c_$t")).as(s"p_$t"),
+      count(when(col("max_j") >= t, 1)).as(s"d_$t")))
+    perDoc.agg(totals.head, totals.tail: _*)
+      .select(explode(array(thrBp.map(t => struct(
+        lit(t).as("threshold_bp"),
+        (coalesce(col(s"p_$t"), lit(0L)) / 2).cast("long").as("n_pairs"),
+        col(s"d_$t").as("n_docs"))): _*)).as("r"))
+      .select("r.threshold_bp", "r.n_pairs", "r.n_docs")
   }
 }

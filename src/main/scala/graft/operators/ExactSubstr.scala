@@ -25,13 +25,16 @@ import org.apache.spark.sql.functions._
   * Scale shape (the reason this beats a distributed suffix array at
   * 100 TB): the corpus is consumed as a narrow positional-gram stream
   * (doc_id, pos, 128-bit md5 of the gram) — ~40 bytes/token vs the
-  * 8x corpus size of a suffix array. The stream is COMPUTED TWICE (once
-  * under the firsts aggregation, once as the gram-join probe side — the
-  * two subplans differ below their exchanges, so ReuseExchange cannot
-  * share them): deliberate, because re-scanning the corpus and re-hashing
-  * beats materializing a gram stream that is itself several times the
-  * corpus size, and the aggregation pass ships only post-combine
-  * partials. First-occurrence detection is a
+  * 8x corpus size of a suffix array. The stream comes from the native
+  * `graft_shingles_all` expression (every positional L-gram in one
+  * codegen'd call) posexploded and hashed by the codegen'd `md5` — no
+  * per-gram interpreted lambda. It is still COMPUTED TWICE (once under
+  * the firsts aggregation, once as the gram-join probe side — the two
+  * subplans differ below their exchanges, so ReuseExchange cannot share
+  * them): deliberate, because re-scanning the corpus and re-running one
+  * native expression beats materializing a gram stream that is itself
+  * several times the corpus size, and the aggregation pass ships only
+  * post-combine partials. First-occurrence detection is a
   * map-side-combinable `min(struct(doc_id, pos)) / count` aggregation by
   * gram hash (NOT a window rank: partial aggregation absorbs hot grams
   * before the shuffle, where a rank window ships every occurrence of the
@@ -78,15 +81,17 @@ object ExactSubstr {
             L: Int, maxOcc: Long = 1000L): DataFrame = {
     require(L >= 2, s"L must be >= 2, got $L")
     require(maxOcc >= 1, s"maxOcc must be >= 1, got $maxOcc")
+    graft.plans.GraftExtensions.register(df.sparkSession)
     val base = df.select(docId.as("doc_id"), split(text, " ").as("w"))
 
     // (doc_id, pos, gh): every positional L-gram as a 128-bit digest —
-    // the gram text never leaves the row.
-    val grams = base
-      .filter(size(col("w")) >= L)
-      .select(col("doc_id"),
-        posexplode(transform(sequence(lit(0), size(col("w")) - L),
-          i => md5(concat_ws(" ", slice(col("w"), i + 1, lit(L)))))).as(Seq("pos", "gh")))
+    // the gram text never leaves the row. graft_shingles_all splits on a
+    // single space exactly as `base` does (empty tokens are tokens) and
+    // yields an empty array below L tokens, so positions index `w`.
+    val grams = df
+      .select(docId.as("doc_id"),
+        posexplode(call_function("graft_shingles_all", text, lit(L))).as(Seq("pos", "gram")))
+      .select(col("doc_id"), col("pos"), md5(col("gram")).as("gh"))
 
     // First corpus occurrence + total occurrences per gram digest.
     // min(struct) == ORDER BY (doc_id, pos) rank-1: struct ordering is

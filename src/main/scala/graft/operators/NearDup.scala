@@ -556,28 +556,25 @@ object NearDup {
       .distinct()
   }
 
-  /** SimHash: 64-bit fingerprint over distinct words, md5-derived bits,
-    * rendered as a 64-char '0'/'1' string (engine-portable, no uint64).
+  /** SimHash: 64-bit fingerprint over a document's distinct lower-cased
+    * single-space words, md5-derived bit votes, rendered as a 64-char
+    * '0'/'1' string (engine-portable, no uint64). Output: (id, simhash),
+    * one row per input row; documents without a word (null, empty or
+    * all-space text) are absent.
     *
-    * ORACLE BASELINE ONLY — this form explodes 64 bit-rows per word so a
-    * SQL engine can replicate it verbatim. Production code should use the
-    * codegen'd `graft_simhash64` native expression ([[graft.plans.SimHash64]],
-    * exercised by q30): one fused pass per document, no explode. */
+    * Computed by the codegen'd `graft_simhash64` expression
+    * ([[graft.plans.SimHash64]], shared with q30): one fused pass per
+    * document, no explode, no shuffle. The q25 oracle keeps the composed
+    * formulation (64 bit-rows per distinct word, `sum(vote)` by (id, bit),
+    * bits re-assembled per id), and `SimHash64Spec` checks the two agree.
+    *
+    * Precondition: `idCol` is unique. The composed form grouped by id, so
+    * two rows sharing an id pooled their words; this form fingerprints
+    * each row on its own. */
   def simHash(df: DataFrame, idCol: Column, textCol: Column): DataFrame = {
-    val words = df.select(idCol.as("id"), explode(array_distinct(split(lower(textCol), " "))).as("w"))
-      .filter(col("w") =!= "")
-    val h = md5(col("w"))
-    // bit b of the 64-bit prefix: hex digit d = b/4, bit-in-digit = 3-(b%4)
-    val bits = words
-      .select(col("id"), h.as("h"), explode(sequence(lit(0), lit(63))).as("b"))
-      .withColumn("digit", expr("instr('0123456789abcdef', substr(h, CAST(b / 4 AS INT) + 1, 1)) - 1"))
-      .withColumn("bit", expr("CAST(floor(digit / power(2, 3 - b % 4)) AS INT) % 2"))
-      .withColumn("vote", when(col("bit") === 1, 1).otherwise(-1))
-    bits.groupBy("id", "b")
-      .agg(sum("vote").as("v"))
-      .groupBy("id")
-      .agg(concat_ws("", array_sort(collect_list(
-        struct(col("b"), when(col("v") >= 0, lit("1")).otherwise(lit("0")).as("s")))).getField("s")).as("simhash"))
+    graft.plans.GraftExtensions.register(df.sparkSession)
+    df.select(idCol.as("id"), call_function("graft_simhash64", textCol).as("simhash"))
+      .where(col("simhash").isNotNull)
   }
 
   /** Multiset k-grams (graft_shingles DEDUPES by design — the set family

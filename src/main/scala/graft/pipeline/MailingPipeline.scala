@@ -13,11 +13,11 @@ import graft.functions.BrFormats
   *
   * Stage order mirrors the reference: blocklist → dedup → per-key aggregates
   * → enrichment → flag → status filter → layout → priority → segmentation.
-  * Every keyed stage shares the customer-key partitioning. Only genuinely
-  * bounded sides carry broadcast hints (the nation dim; the blocked-key set,
-  * count-gated inside [[Blocklist.removeByStatusThreshold]]); the
-  * customer-cardinality frames (debts, contacts) join through the shuffle
-  * path where AQE may still broadcast them when measured-small.
+  * Every keyed stage shares the customer-key partitioning. Only the
+  * genuinely bounded nation dim carries a broadcast hint; the blocked-key
+  * set ([[Blocklist.removeByStatusThreshold]]) and the
+  * customer-cardinality frames (debts, contacts) are left to the planner,
+  * which broadcasts them when estimated or measured small.
   */
 object MailingPipeline {
 

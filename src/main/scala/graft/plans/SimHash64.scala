@@ -8,10 +8,11 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Native one-pass SimHash: 64-bit fingerprint of a document's distinct
   * lower-cased whitespace tokens, rendered as a 64-char '0'/'1' string.
   *
-  * Semantically identical to `operators.NearDup.simHash` (the composed
-  * explode×64 + two-aggregation form) but runs as a single scalar
-  * expression inside whole-stage codegen: no explode, no shuffle, no
-  * 64×tokens intermediate rows. This is the preferred extension shape when
+  * Semantically identical to the composed explode×64 + two-aggregation
+  * form the q25 oracle spells out (`SimHash64Spec` keeps it as the
+  * reference) but runs as a single scalar expression inside whole-stage
+  * codegen: no explode, no shuffle, no 64×tokens intermediate rows.
+  * `operators.NearDup.simHash` is this expression plus a non-null filter. This is the preferred extension shape when
   * built-in operators can't express an operator efficiently — a custom
   * Catalyst `Expression` with `doGenCode`, before reaching for a custom
   * physical plan.

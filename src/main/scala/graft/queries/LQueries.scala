@@ -281,19 +281,11 @@ object LQueries {
       .withColumnRenamed("key", "cohort")
 
   /** L28: Gopher-style within-doc repetition signals — duplicate-word /
-    * duplicate-bigram fractions as one narrow projection, plus the modal
-    * bigram's share through the two-aggregation shuffle path, left-joined
-    * (token-poor docs have no bigrams → 0). */
-  def q56(s: SparkSession, d: String): DataFrame = {
-    import graft.functions.Repetition
-    val docs = Tables.documents(s, d)
-    Repetition.repetitionSignals(docs, col("doc_id"), col("text"))
-      .join(Repetition.topNgramFracQ(docs, col("doc_id"), col("text"), n = 2),
-        Seq("id"), "left")
-      .select(col("id").as("doc_id"), col("n_tokens"),
-        col("dup_word_frac_q"), col("dup_bigram_frac_q"),
-        coalesce(col("top_2gram_frac_q"), lit(0L)).as("top_bigram_frac_q"))
-  }
+    * duplicate-bigram fractions and the modal bigram's share, all in one
+    * narrow projection (token-poor docs have no bigrams → 0). */
+  def q56(s: SparkSession, d: String): DataFrame =
+    graft.functions.Repetition.repetitionSignals(Tables.documents(s, d), col("doc_id"), col("text"))
+      .withColumnRenamed("id", "doc_id")
 
   /** L29: benchmark decontamination stats — every 20th doc plays the held-out
     * benchmark; the rest are "training" docs scored by the fraction of their
@@ -695,18 +687,12 @@ object LQueries {
         col("doc_id"), col("text"), chunkTokens = 16, overlap = 4)
       .withColumnRenamed("id", "doc_id")
 
-  /** L3 via the native Catalyst expression (SURVEY §2b): same semantics as
-    * q25 but computed by `plans.SimHash64` inside whole-stage codegen —
-    * scalar projection, no explode/shuffle. Shares q25's oracle. */
-  def q30(s: SparkSession, d: String): DataFrame = {
-    graft.plans.GraftExtensions.register(s)
-    Tables.documents(s, d).select(
-        col("doc_id").as("id"),
-        call_function("graft_simhash64", col("text")).as("simhash"))
-      // The expression emits NULL for token-less docs; the oracle's words
-      // CTE drops those docs, so filter to align row sets.
-      .where(col("simhash").isNotNull)
-  }
+  /** L3 via the native Catalyst expression (SURVEY §2b): `plans.SimHash64`
+    * inside whole-stage codegen, no explode/shuffle. Since q25's
+    * [[NearDup.simHash]] runs the same expression, both rows run one
+    * operator and share q25's oracle. */
+  def q30(s: SparkSession, d: String): DataFrame =
+    NearDup.simHash(Tables.documents(s, d), col("doc_id"), col("text"))
 
   /** B1: exchange-free co-located join + aggregation over tables bucketed by
     * the join key (pay the shuffle at write time, reuse it for every

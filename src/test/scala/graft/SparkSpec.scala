@@ -14,6 +14,9 @@ object SparkSpec {
 abstract class SparkSpec extends AnyFunSuite {
   val ss: SparkSession = SparkSpec.session
 
+  /** The sf0.001 test tables, `~/testdata/sf0.001`. */
+  val smallSfDir: String = s"${sys.props("user.home")}/testdata/sf0.001"
+
   /** Rows a CSV re-read of `dir` finds (header lines excluded); 0 when a
     * write of no rows left no part file to read. */
   def csvRowCount(dir: String, sep: String): Long = {

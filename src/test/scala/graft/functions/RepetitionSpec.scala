@@ -1,6 +1,10 @@
 package graft.functions
 
 import graft.SparkSpec
+import graft.sources.Tables
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
 
 class RepetitionSpec extends SparkSpec {
@@ -82,5 +86,54 @@ class RepetitionSpec extends SparkSpec {
       .queryExecution.executedPlan
     val exchanges = plan.collect { case e: org.apache.spark.sql.execution.exchange.Exchange => e }
     assert(exchanges.isEmpty, s"expected zero shuffles, got:\n$plan")
+  }
+
+  /** The retired modal-gram share: explode every gram, count per
+    * (doc, gram), then max/sum per doc — two shuffles. The equivalence
+    * reference for the in-row fold. */
+  private def retiredTopNgramFracQ(df: DataFrame, id: Column, text: Column, n: Int): DataFrame =
+    df.select(id.as("id"), Repetition.wordTokens(text).as("__toks"))
+      .select(col("id"), explode(Repetition.wordNgrams(col("__toks"), n)).as("gram"))
+      .groupBy("id", "gram").agg(count(lit(1)).as("cnt"))
+      .groupBy("id")
+      .agg(floor(max("cnt") * lit(10000.0) / sum("cnt")).cast("long").as(s"top_${n}gram_frac_q"))
+
+  private def idLongMap(df: DataFrame): Map[Long, Long] =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  private lazy val edgeCorpus: DataFrame = Seq[(Long, String)](
+      (1L, ""), (2L, "one"), (3L, "two words"), (4L, "w w w w w"), (5L, "x x"),
+      (6L, "  a  b   a  b  "), (7L, "a b a b a"), (8L, null), (9L, "to be or not to be"),
+      (10L, "Same same SAME same"))
+    .toDF("doc_id", "text")
+    .unionByName(Tables.documents(ss, smallSfDir)
+      .select((col("doc_id").cast("long") + 1000L).as("doc_id"), col("text")))
+
+  test("topNgramFracQ matches the retired two-aggregation form on sf0.001 documents plus edge rows") {
+    for (n <- Seq(1, 2, 3)) {
+      val got = idLongMap(Repetition.topNgramFracQ(edgeCorpus, col("doc_id"), col("text"), n))
+      val want = idLongMap(retiredTopNgramFracQ(edgeCorpus, col("doc_id"), col("text"), n))
+      assert(got == want, s"n = $n")
+      assert(want.size > 100, s"n = $n: corpus too small to mean anything")
+    }
+    val bigrams = idLongMap(Repetition.topNgramFracQ(edgeCorpus, col("doc_id"), col("text"), 2))
+    assert(!bigrams.contains(1L) && !bigrams.contains(2L) && !bigrams.contains(8L))
+    assert(bigrams(3L) == 10000L && bigrams(4L) == 10000L && bigrams(5L) == 10000L)
+    assert(bigrams(6L) == 6666L) // "a b","b a","a b" → 2 of 3
+  }
+
+  test("q56's modal bigram share matches the retired join form; its plan has no exchange") {
+    val retired = Repetition.repetitionSignals(edgeCorpus, col("doc_id"), col("text"))
+      .drop("top_bigram_frac_q")
+      .join(retiredTopNgramFracQ(edgeCorpus, col("doc_id"), col("text"), 2), Seq("id"), "left")
+      .select(col("id"), coalesce(col("top_2gram_frac_q"), lit(0L)))
+    val now = Repetition.repetitionSignals(edgeCorpus, col("doc_id"), col("text"))
+      .select(col("id"), col("top_bigram_frac_q"))
+    assert(idLongMap(now) == idLongMap(retired))
+    assert(idLongMap(now)(2L) == 0L && idLongMap(now)(8L) == 0L)
+
+    val plan = graft.queries.LQueries.q56(ss, smallSfDir).queryExecution.executedPlan
+    val exchanges = new AdaptiveSparkPlanHelper {}.collect(plan) { case e: Exchange => e }
+    assert(exchanges.isEmpty, s"q56 should be one narrow projection:\n$plan")
   }
 }

@@ -47,6 +47,38 @@ class BlocklistSpec extends SparkSpec {
     assert(kept.toSeq == Seq(2, 3))
   }
 
+  test("removeByStatusThreshold builds its frame without running a Spark job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val customer = graft.sources.Tables.customer(ss, smallSfDir)
+    val events = graft.sources.Tables.events(ss, smallSfDir)
+    org.apache.spark.graftbench.BusDrain.drain(ss.sparkContext)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    ss.sparkContext.addSparkListener(listener)
+    try {
+      Blocklist.removeByStatusThreshold(customer, col("c_custkey"), events, col("user_id"),
+        col("event_type"), Seq("error"), 3)
+      org.apache.spark.graftbench.BusDrain.drain(ss.sparkContext)
+      assert(jobs.get == 0, s"${jobs.get} job(s) ran before the first action")
+    } finally ss.sparkContext.removeSparkListener(listener)
+  }
+
+  test("without a hint the planner still broadcasts the blocked-key side (q04, test scale)") {
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    val q04 = graft.queries.RQueries.q04(ss, smallSfDir)
+    q04.collect()
+    val plan = q04.queryExecution.executedPlan
+    // the helper descends into the final adaptive plan and its query stages
+    val found = new AdaptiveSparkPlanHelper {}.collect(plan) {
+      case j: BroadcastHashJoinExec if j.joinType == LeftAnti => j
+    }
+    assert(found.size == 1, s"expected one broadcast left-anti join, found ${found.size}:\n$plan")
+  }
+
   test("filterWithRejects splits and annotates the rejected side") {
     val df = Seq((1, "Desligado"), (2, "ativo")).toDF("id", "bloq")
     val (kept, rejected) = Blocklist.filterWithRejects(df, col("bloq"), Set("desligado"))

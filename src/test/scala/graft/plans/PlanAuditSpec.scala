@@ -17,9 +17,8 @@ class PlanAuditSpec extends SparkSpec {
   private val bnljAllowed: Map[String, String] = Map(
     "q20_cosine_topk" -> "tiny fixed query-vector set vs corpus (bounded side)",
     "q156_ann_recall" -> ("runs q20/q26/q33's list plans to measure their recall — " +
-      "inherits exactly their allowlisted broadcast query-set x corpus products; " +
+      "inherits exactly q20's and q33's allowlisted broadcast query-set x corpus products; " +
       "the harness's own overlap joins are (qid, nid) equi-joins"),
-    "q26_lsh_ann" -> "tiny fixed query-vector set vs corpus (bounded side)",
     "q33_ivf_ann" -> "tiny fixed query-vector set vs corpus (bounded side)",
     "q76_ivf_multiprobe" -> ("same IVF assignment shape as q33 (broadcast centroid cross for the " +
       "packed-long argmax) plus the query-side top-nprobe centroid scoring — both broadcast sides " +
@@ -64,9 +63,6 @@ class PlanAuditSpec extends SparkSpec {
       "shape; the data-scale work collapsed in the per-variant agg before it"),
     "q145_cluster_sizes" -> ("the singleton row crosses TWO 1-row count aggregates " +
       "(total docs x clustered docs) — both sides single-row by construction"),
-    "q147_threshold_curve" -> ("the 5-row threshold spine broadcast into the pair " +
-      "frame on a >= predicate — a bounded-metadata build side is exactly what " +
-      "BNLJ is for; the pair frame itself came from the equi-join L4 path"),
     "q148_blocklist_sweep" -> ("the threshold spine (<= maxThreshold rows) joined " +
       "on >= against the metadata-sized critical-count histogram — both sides " +
       "bounded by construction, the q112 spine shape"),
@@ -76,14 +72,21 @@ class PlanAuditSpec extends SparkSpec {
 
   test("no registered query plans a cartesian product or stray BNLJ") {
     val offenders = scala.collection.mutable.ArrayBuffer.empty[String]
+    val bnljHits = scala.collection.mutable.Set.empty[String]
     graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       val plan = fn(ss, sfDir).queryExecution.executedPlan.toString
       if (plan.contains("CartesianProduct"))
         offenders += s"$name: CartesianProduct"
-      if (plan.contains("BroadcastNestedLoopJoin") && !bnljAllowed.contains(name))
-        offenders += s"$name: BroadcastNestedLoopJoin"
+      if (plan.contains("BroadcastNestedLoopJoin")) {
+        bnljHits += name
+        if (!bnljAllowed.contains(name))
+          offenders += s"$name: BroadcastNestedLoopJoin"
+      }
     }
     assert(offenders.isEmpty, s"scale anti-patterns:\n${offenders.mkString("\n")}")
+    val stale = bnljAllowed.keySet -- bnljHits
+    assert(stale.isEmpty,
+      s"allowlist entries no longer planning a BroadcastNestedLoopJoin (prune them): $stale")
   }
 
   /** Queries allowed an unpartitioned WindowExec (single-partition window),

@@ -2,6 +2,8 @@ package graft.plans
 
 import graft.SparkSpec
 import graft.operators.NearDup
+import graft.sources.Tables
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 class SimHash64Spec extends SparkSpec {
@@ -12,21 +14,48 @@ class SimHash64Spec extends SparkSpec {
     (2L, "the quick brown fox"),
     (3L, "Totally Different Words here"),
     (4L, ""),
-    (5L, "  double  spaced   tokens ")
+    (5L, "  double  spaced   tokens "),
+    (6L, "The QUICK brown FOX"),
+    (7L, "fox fox fox the the quick brown fox"),
+    (8L, null)
   ).toDF("doc_id", "text")
 
+  /** The composed explode×64 form — the q25 oracle's formulation: bit b of
+    * each distinct lower-cased word's md5 votes ±1, votes sum per
+    * (id, b), and the bits re-assemble in b order per id. Groups by id, so
+    * it agrees with the per-row native form only on unique ids. */
+  private def composedSimHash(df: DataFrame, idCol: Column, textCol: Column): DataFrame = {
+    val words = df.select(idCol.as("id"), explode(array_distinct(split(lower(textCol), " "))).as("w"))
+      .filter(col("w") =!= "")
+    val bits = words
+      .select(col("id"), md5(col("w")).as("h"), explode(sequence(lit(0), lit(63))).as("b"))
+      .withColumn("digit", expr("instr('0123456789abcdef', substr(h, CAST(b / 4 AS INT) + 1, 1)) - 1"))
+      .withColumn("bit", expr("CAST(floor(digit / power(2, 3 - b % 4)) AS INT) % 2"))
+      .withColumn("vote", when(col("bit") === 1, 1).otherwise(-1))
+    bits.groupBy("id", "b")
+      .agg(sum("vote").as("v"))
+      .groupBy("id")
+      .agg(concat_ws("", array_sort(collect_list(
+        struct(col("b"), when(col("v") >= 0, lit("1")).otherwise(lit("0")).as("s")))).getField("s")).as("simhash"))
+  }
+
+  private def byId(df: DataFrame): Map[Long, String] =
+    df.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+
   test("native expression matches the composed explode-form simhash") {
-    GraftExtensions.register(ss)
-    val native = docs.select(col("doc_id").as("id"), call_function("graft_simhash64", col("text")).as("sh"))
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    val composed = NearDup.simHash(docs.filter(length(trim(col("text"))) > 0), col("doc_id"), col("text"))
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    // edge rows plus every sf0.001 document, ids kept disjoint
+    val corpus = docs.unionByName(Tables.documents(ss, smallSfDir)
+      .select((col("doc_id").cast("long") + 1000L).as("doc_id"), col("text")))
+    val native = byId(NearDup.simHash(corpus, col("doc_id"), col("text")))
+    val composed = byId(composedSimHash(corpus, col("doc_id"), col("text")))
+    assert(composed.size > 100, s"corpus too small to mean anything: ${composed.size}")
     // both forms drop token-less docs: composed via explode of the empty
-    // set, native via NULL fingerprint
-    composed.foreach { case (id, sh) => assert(native(id) == sh, s"doc $id") }
+    // set, native via a NULL fingerprint filtered out
+    assert(native == composed)
+    assert(!native.contains(4L) && !native.contains(8L))
     assert(native(1L) == native(2L) && native(1L) != native(3L))
-    assert(native(4L) == null, "token-less doc must fingerprint to NULL")
-    assert(native.keySet == composed.keySet + 4L)
+    assert(native(6L) == native(1L), "words are lower-cased before hashing")
+    assert(native(7L) == native(1L), "repeated words vote once")
   }
 
   test("token-less text → NULL under both eval paths; blank variants too") {
