@@ -255,35 +255,6 @@ object Bench {
       (s.last, med, if (peers.isEmpty) med else peers(peers.size / 2))
     }
 
-  /** Cumulative shuffle/spill task-metric counters plus the task-duration
-    * log. Per-query deltas are taken between
-    * [[org.apache.spark.graftbench.BusDrain]]-fenced snapshots, so a
-    * query's tail events can't bleed into the next row. */
-  final class BytesListener extends org.apache.spark.scheduler.SparkListener {
-    private val sr = new java.util.concurrent.atomic.AtomicLong
-    private val sw = new java.util.concurrent.atomic.AtomicLong
-    private val sp = new java.util.concurrent.atomic.AtomicLong
-    private val durs = scala.collection.mutable.ArrayBuffer.empty[(Int, Long)]
-    override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val m = te.taskMetrics
-      if (m != null) {
-        sr.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        sw.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        sp.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
-      }
-      if (te.taskInfo != null)
-        durs.synchronized { durs += ((te.stageId, te.taskInfo.duration)) }
-    }
-    def snapshot: (Long, Long, Long) = (sr.get, sw.get, sp.get)
-    /** Fence index into the duration log — O(1), no copy. */
-    def durationCount: Int = durs.synchronized(durs.size)
-    /** One query's (stageId, duration) window by fence indexes —
-      * O(window), copied under the lock so a late straggler append can't
-      * tear the slice. */
-    def durationWindow(from: Int, until: Int): Seq[(Int, Long)] =
-      durs.synchronized(durs.slice(from, until).toVector)
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
@@ -325,15 +296,10 @@ object Bench {
 
     spark.catalog.clearCache() // drop warmup-scale cached data before timing
 
-    // Per-query shuffle/spill bytes ride along with the timings: snapshot
-    // the cumulative listener counters before and after each query, with
-    // the listener bus drained at both fences so deltas are exact.
-    val bytesListener = new BytesListener
-    spark.sparkContext.addSparkListener(bytesListener)
-    def fencedSnapshot(): ((Long, Long, Long), Int) = {
-      org.apache.spark.graftbench.BusDrain.drain(spark.sparkContext)
-      (bytesListener.snapshot, bytesListener.durationCount)
-    }
+    // Per-query shuffle/spill bytes and task skew ride along with the
+    // timings: each query's window lies between two bus-drained marks of
+    // the metrics listener, so its tail events can't bleed into the next row.
+    val metrics = new graft.metrics.MetricsListener(spark.sparkContext)
 
     // Two timed passes, report the per-query MIN: a single pass is at the
     // mercy of transient host stalls (observed 2-8× outliers on individual
@@ -346,7 +312,7 @@ object Bench {
     // not a timing.
     def timedPass(): Seq[(String, Double, Boolean, (Long, Long, Long), (Long, Long, Long))] =
       queries.map { case (name, fn) =>
-        val (b0, n0) = fencedSnapshot()
+        val from = metrics.mark()
         val t0 = System.nanoTime()
         val ok = try { fn(spark, sfDir).count(); true } catch {
           case t: Throwable =>
@@ -354,9 +320,8 @@ object Bench {
             false
         }
         val elapsed = (System.nanoTime() - t0) / 1e9
-        val (b1, n1) = fencedSnapshot()
-        val skew = taskSkew(bytesListener.durationWindow(n0, n1))
-        (name, elapsed, ok, (b1._1 - b0._1, b1._2 - b0._2, b1._3 - b0._3), skew)
+        val w = metrics.window(from, metrics.mark())
+        (name, elapsed, ok, (w.shuffleReadBytes, w.shuffleWriteBytes, w.spillBytes), w.skew)
       }
     // Release dropped checkpoint/broadcast blocks between passes so pass 2
     // measures the plans, not the first pass's garbage.

@@ -26,11 +26,9 @@ object GraftSession {
       // ~32-task scheduling overhead — q126's five peel rounds read 1.8x
       // slower at sf0.1 (round-15 adjudication). The low floor is now
       // SCOPED to the iterative loops that need it
-      // (Checkpoints.withSpreadFloor — BFS seedDistances, DupClusters).
-      // This env knob A/Bs the session-global DEFAULT only; the scoped
-      // loops read their own SPARK_GRAFT_MIN_PARTITION_SIZE_LOOP knob
-      // (withSpreadFloor overrides the session value inside the bracket).
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION_SIZE", "1m"))
+      // (Checkpoints.withSpreadFloor — BFS seedDistances, DupClusters);
+      // BASELINE.md records the global-versus-scoped probes.
+      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1m")
       .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
       .config("spark.sql.parquet.filterPushdown", "true")
       .config("spark.sql.parquet.aggregatePushdown", "true")

@@ -1,277 +1,68 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import graft.operators.NearDup
-import graft.sources.Tables
+import org.apache.spark.sql.Observation
+import org.apache.spark.sql.functions.{count, lit}
+import graft.metrics.MetricsListener
+import graft.pipeline.StageReport
 
-/** Dev profiling harness: time the sub-stages of a slow query in isolation
-  * (each timed twice — cold then warm — so codegen compile cost is visible
-  * separately from steady-state). Usage:
-  * `sbt "runMain graft.Prof <sfDir> [cpus] [suite]"` — pass cpus=32 when
-  * stage numbers must be comparable to bench captures. Suites:
-  * `neardup` (default — the near-dup family + q100/q126/q103 stages),
-  * `corpus` (q165 pipeline stages), `corpus-exprs` (per-expression
-  * scoring costs), `corpus-gate` (gate-stage plan inspection: expression
-  * re-evaluation counts), `kcore` (q126 peel rounds alone). Graph-query
-  * profiling stays in [[ProfGraph]]. The round-15 bisection one-offs
-  * (ProfC/ProfC2/ProfC3/ProfK) are folded here; git history keeps the
-  * original bisections. */
+/** Query profiler: runs each selected registered query cold, then warm,
+  * and splits each run's wall time down the stack — Spark jobs (busy vs
+  * driver gap), then the heaviest Spark stages (tasks, max/median task,
+  * shuffle bytes, GC). Usage:
+  * `sbt "runMain graft.Prof <sfDir> <cpus> <queries>"`, where `<queries>`
+  * takes [[Bench.selectOnly]]'s syntax (`q103,q168_stream_netting`).
+  *
+  * Each run materializes every output column with a `noop` write (a
+  * `count()` lets Catalyst prune the columns it does not need) and takes
+  * its row count from an [[Observation]] on that same write. A query that
+  * throws prints a `FAILED` line and the profile goes on. */
 object Prof {
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val cpus = if (args.length > 1) args(1).toInt else 8
-    val suite = if (args.length > 2) args(2) else "neardup"
-    val spark = GraftSession.local(s"graft-prof-$suite", cpus)
-    spark.sparkContext.setLogLevel("WARN")
-    suite match {
-      case "neardup"      => neardup(spark, sfDir)
-      case "corpus"       => corpus(spark, sfDir, cpus)
-      case "corpus-exprs" => corpusExprs(spark, sfDir)
-      case "corpus-gate"  => corpusGate(spark, sfDir)
-      case "kcore"        => kcore(spark, sfDir)
-      case "prefix-ab"    => prefixAb(spark, sfDir)
-      case other => sys.error(s"unknown suite '$other' " +
-        "(neardup | corpus | corpus-exprs | corpus-gate | kcore | prefix-ab)")
+    if (args.length != 3) {
+      System.err.println("usage: graft.Prof <sfDir> <cpus> <queries>")
+      sys.exit(2)
+    }
+    val Array(sfDir, cpus, spec) = args
+    val names = Bench.selectOnly(Some(spec), SparkEntry.queries.keys.toSeq.sorted)
+    if (names.isEmpty) {
+      System.err.println(s"[prof] '$spec' matches no query")
+      sys.exit(2)
+    }
+    val spark = GraftSession.local("graft-prof", cpus.toInt)
+    val metrics = new MetricsListener(spark.sparkContext)
+    for (name <- names; run <- Seq("cold", "warm")) {
+      val from = metrics.mark()
+      try {
+        val obs = Observation()
+        SparkEntry.queries(name)(spark, sfDir).observe(obs, count(lit(1)).as("rows"))
+          .write.format("noop").mode("overwrite").save()
+        val rows = StageReport.awaitObserved(obs, s"$name $run").getAs[Long]("rows")
+        report(s"$name $run", rows, metrics.window(from, metrics.mark()))
+      } catch {
+        case t: Throwable =>
+          println(s"== $name $run FAILED ${t.getClass.getSimpleName}: ${String.valueOf(t.getMessage).take(300)}")
+      }
     }
     spark.stop()
   }
 
-  private def time(name: String)(mk: => DataFrame): DataFrame = {
-    var out: DataFrame = null
-    (1 to 2).foreach { i =>
-      val t0 = System.nanoTime()
-      out = mk
-      val n = out.count()
-      println(f"PROF $name%-28s run$i ${(System.nanoTime() - t0) / 1e9}%8.3fs rows=$n")
+  private def report(tag: String, rows: Long, w: MetricsListener.Window): Unit = {
+    println(f"== $tag wall=${w.wallMs / 1e3}%.3fs rows=$rows jobs=${w.jobs.size} " +
+      f"busy=${w.busyMs / 1e3}%.3fs gap=${w.gapMs / 1e3}%.3fs")
+    // Gap before each job, measured from the latest job end seen so far and
+    // seeded at the window start, so the first job's planning time shows.
+    var prevEnd = w.fromMs
+    w.jobs.sortBy(_.startMs).foreach { j =>
+      val gap = (j.startMs - prevEnd) / 1e3
+      val dur = if (j.endMs < 0) "  no end" else f"${(j.endMs - j.startMs) / 1e3}%7.3fs"
+      println(f"   job ${j.id}%5d $dur gap=$gap%7.3fs ${j.desc.take(80)}")
+      prevEnd = math.max(prevEnd, j.endMs)
     }
-    out
-  }
-
-  /** q100's candidate checkpoint+spread A/B at an arbitrary scale point,
-    * interleaved (on, off, on, off via time()'s two reps) so ambient drift
-    * can't masquerade as a verdict — the round-17 adjudication harness for
-    * the few-split gate: sf0.1 wants the spread ON (AQE coalesces the
-    * 125k-pair candidate set into 2-4 tasks of real CPU), sf1 measured it
-    * as a pure barrier, and the sf10 gated row regressed 56→70 s, so the
-    * gate's decision is measured per scale point, not argued. */
-  private def prefixAb(spark: SparkSession, sfDir: String): Unit = {
-    val docs = Tables.documents(spark, sfDir)
-    docs.count() // warm the scan
-    // Arm order is env-controlled so the toggle can be separated from
-    // session-position warming (JIT, page cache, shuffle files): a first
-    // sf10 run in on,off,auto order read a MONOTONIC 178→36 s decrease —
-    // position-confounded; the reversed order is the control.
-    val arms = sys.env.getOrElse("SPARK_GRAFT_AB_ORDER", "on,off,auto")
-      .split(",").map(_.trim).filter(_.nonEmpty)
-    arms.foreach {
-      case "on" => time("q100_spread_on") {
-        NearDup.prefixJaccardPairs(docs, col("doc_id"), col("text"), 3, 0.5,
-          spreadCandidates = Some(true))
-      }
-      case "off" => time("q100_spread_off") {
-        NearDup.prefixJaccardPairs(docs, col("doc_id"), col("text"), 3, 0.5,
-          spreadCandidates = Some(false))
-      }
-      case "auto" => time("q100_gated_auto") {
-        NearDup.prefixJaccardPairs(docs, col("doc_id"), col("text"), 3, 0.5)
-      }
-      case other => sys.error(s"unknown arm '$other' (on | off | auto)")
+    w.stages.take(10).foreach { s =>
+      println(f"   stage ${s.stage}%5d tasks=${s.tasks}%4d sum=${s.sumMs / 1e3}%7.2fs " +
+        f"max=${s.maxMs / 1e3}%6.2fs med=${s.medMs / 1e3}%6.2fs " +
+        f"shR=${s.shReadBytes / 1e6}%7.1fMB shW=${s.shWriteBytes / 1e6}%7.1fMB " +
+        f"gc=${s.gcMs / 1e3}%5.2fs ${s.name}")
     }
-  }
-
-  /** The near-dup family + the q100 prefix-filter, q126 k-core and q103
-    * triangle stage breakdowns (the bench suite's heaviest rows). */
-  private def neardup(spark: SparkSession, sfDir: String): Unit = {
-    val docs = Tables.documents(spark, sfDir)
-    time("docs_scan") { docs }
-    time("shingles") { NearDup.wordShingles(docs, col("doc_id"), col("text"), 3) }
-    time("signatures") {
-      NearDup.minHashSignatures(docs, col("doc_id"), col("text"), 3, 8)
-    }
-    time("lsh_candidates") {
-      NearDup.lshCandidates(
-        NearDup.minHashSignatures(docs, col("doc_id"), col("text"), 3, 8), 2)
-    }
-    time("q18_full") {
-      NearDup.minHashLshPairs(docs, col("doc_id"), col("text"), 3, 8, 2, 0.5)
-    }
-    time("q19_full") {
-      NearDup.ngramJaccardPairs(docs, col("doc_id"), col("text"), 3, 0.5)
-    }
-    time("q42_edges_capped") {
-      NearDup.ngramJaccardPairs(docs, col("doc_id"), col("text"), 3, 0.5, maxDocFreq = 50L)
-    }
-    time("q42_full") {
-      graft.operators.DupClusters.connectedComponents(
-        NearDup.ngramJaccardPairs(docs, col("doc_id"), col("text"), 3, 0.5, maxDocFreq = 50L))
-    }
-
-    // q100 prefix-filter stages (inline replica of prefixJaccardPairs)
-    val grams = NearDup.wordShingles(docs, col("doc_id"), col("text"), 3)
-    val dfreq = grams.groupBy("gram").agg(count(lit(1)).as("__df"))
-    time("prefix_dfreq") { dfreq }
-    val wRank = org.apache.spark.sql.expressions.Window
-      .partitionBy("id").orderBy(col("__df").asc, col("gram").asc)
-    val wSize = org.apache.spark.sql.expressions.Window.partitionBy("id")
-    val prefixT = grams.join(dfreq, Seq("gram"))
-      .withColumn("__n", count(lit(1)).over(wSize))
-      .withColumn("__rn", row_number().over(wRank))
-      .filter(col("__rn") <= col("__n") - ceil(lit(0.5) * col("__n")) + 1)
-      .select(col("id"), col("gram"), col("__n").as("n"))
-    time("prefix_table") { prefixT }
-    time("prefix_candidates") {
-      val p = prefixT.withColumn("pos", col("n") * 0) // placeholder; full filter in operator
-      p.as("a").join(p.as("b"),
-          col("a.gram") === col("b.gram") && col("a.id") < col("b.id") &&
-            greatest(col("a.n"), col("b.n")) * 0.5 <= least(col("a.n"), col("b.n")))
-        .select(col("a.id").as("id_a"), col("b.id").as("id_b")).distinct()
-    }
-    time("q100_full") {
-      NearDup.prefixJaccardPairs(docs, col("doc_id"), col("text"), 3, 0.5)
-    }
-
-    // q126 k-core stages: how much is the edge build vs the peel rounds.
-    // NOTE coOccurrenceEdges ends in an EAGER localCheckpoint — the build
-    // cost lands at the CALL, so `edge_build_fresh` wraps the call itself
-    // (its run2 pays the build again; the *_reuse stages below read the
-    // one materialized frame, which is what the graph ops share in a
-    // single query but NOT across bench queries — each bench query
-    // rebuilds).
-    var undV: org.apache.spark.sql.DataFrame = null
-    time("edge_build_fresh") {
-      undV = graft.operators.Graph.coOccurrenceEdges(
-        Tables.lineitem(spark, sfDir), "l_orderkey", "l_partkey")
-      undV
-    }
-    val und = undV
-    time("kcore_edge_build") { und }
-    time("kcore_1_round") { graft.operators.Graph.kCorePeel(und, 80, 1) }
-    time("kcore_5_rounds") { graft.operators.Graph.kCorePeel(und, 80, 5) }
-
-    // q103 triangle stages (BASELINE.md sf1 table's steepest ratio): the
-    // sf1 graph is 10 DISJOINT isomorphic copies of sf0.1's, so true
-    // triangle work is exactly 10x — the per-stage ratios below attribute
-    // the observed aggregate to heavy stages scaling ~10x vs the
-    // edge-build / scheduling floor amortizing. Stages mirror
-    // Graph.triangleCounts exactly (same broadcast hints).
-    {
-      import org.apache.spark.sql.functions.{broadcast => bcast}
-      val u = und // coOccurrenceEdges is already eagerly checkpointed
-      time("tri_edge_build") { u }
-      val deg = graft.operators.Graph.symmetrize(u)
-        .groupBy(col("src").as("n")).agg(count(lit(1)).as("d"))
-      time("tri_degrees") { deg }
-      def directed = {
-        val dl = bcast(deg)
-        val withDeg = u
-          .join(dl.select(col("n").as("u2"), col("d").as("du")), col("u") === col("u2"))
-          .join(dl.select(col("n").as("v2"), col("d").as("dv")), col("v") === col("v2"))
-        withDeg.select(
-          when(struct(col("du"), col("u")) < struct(col("dv"), col("v")), col("u")).otherwise(col("v")).as("lo"),
-          when(struct(col("du"), col("u")) < struct(col("dv"), col("v")), col("v")).otherwise(col("u")).as("hi"))
-      }
-      time("tri_direct_edges") { directed }
-      val adj = directed.groupBy(col("lo").as("n")).agg(collect_list(col("hi")).as("nbrs"))
-      time("tri_adjacency") { adj }
-      time("tri_intersect_close") {
-        directed
-          .join(bcast(adj).select(col("n").as("n1"), col("nbrs").as("nb1")), col("lo") === col("n1"))
-          .join(bcast(adj).select(col("n").as("n2"), col("nbrs").as("nb2")), col("hi") === col("n2"))
-          .select(col("lo"), col("hi"),
-            explode(array_intersect(col("nb1"), col("nb2"))).as("w"))
-      }
-      time("q103_full") { graft.operators.Graph.triangleCounts(u) }
-    }
-  }
-
-  /** q165 corpus-pipeline stages (the round-15 whale bisection). */
-  private def corpus(spark: SparkSession, sfDir: String, cpus: Int): Unit = {
-    import graft.pipeline.CorpusPipeline
-    val cfg = CorpusPipeline.Config(minQualityQ = 5000L, maxDupWordFracQ = 6500L)
-    val docs = Tables.documents(spark, sfDir)
-    val cleaned = time("clean_nfc_pii") {
-      docs.repartition(cpus).select(col("doc_id").cast("long").as("id"),
-        graft.functions.PiiScrub.scrub(call_function("graft_nfc", col("text"))).as("text"))
-    }
-    val kept = time("score_gate") {
-      CorpusPipeline.scoreAndGate(cleaned, cfg)
-    }.localCheckpoint(true)
-    val keepIds = graft.operators.Dedup.exactByHash(kept, col("text"), col("id"))
-      .select(col("keep_id").as("id"))
-    val exactDeduped = time("exact_dedup") {
-      kept.join(keepIds, Seq("id"), "left_semi")
-    }.localCheckpoint(true)
-    println(s"exactDeduped parts after checkpoint: ${exactDeduped.rdd.getNumPartitions}")
-    val pairs = time("near_dup_pairs") {
-      graft.operators.NearDup.ngramJaccardPairs(exactDeduped, col("id"), col("text"),
-        cfg.shingleK, cfg.nearDupThreshold, cfg.maxGramDocFreq)
-    }
-    time("components") {
-      graft.operators.DupClusters.connectedComponents(pairs)
-    }
-    time("full_q165") {
-      CorpusPipeline.prepare(docs, col("doc_id"), col("text"), cfg)
-    }
-  }
-
-  /** Per-expression costs of the q165 scoring gate (which expression eats
-    * the time when the gate runs over the whole corpus). */
-  private def corpusExprs(spark: SparkSession, sfDir: String): Unit = {
-    val docs = Tables.documents(spark, sfDir).repartition(32)
-      .select(col("doc_id"), col("text")).localCheckpoint(true)
-    def timeC(name: String)(c: Column): Unit = {
-      (1 to 2).foreach { i =>
-        val t0 = System.nanoTime()
-        val n = docs.select(c.as("x")).agg(count(col("x"))).collect()(0).getLong(0)
-        println(f"PROF $name%-20s run$i ${(System.nanoTime() - t0) / 1e9}%8.3fs n=$n")
-      }
-    }
-    timeC("nfc")(call_function("graft_nfc", col("text")))
-    timeC("pii_scrub")(graft.functions.PiiScrub.scrub(col("text")))
-    timeC("lang_id")(graft.functions.TextAnalysis.langId(col("text")))
-    timeC("quality_q")(graft.functions.TextAnalysis.qualityScoreQ(col("text")))
-    timeC("ws_tokens")(graft.functions.TextAnalysis.wsTokenCount(col("text")))
-    timeC("word_tokens")(size(graft.functions.Repetition.wordTokens(col("text"))))
-    timeC("dup_word_q")(graft.functions.Repetition.dupFracQ(
-      graft.functions.Repetition.wordTokens(col("text"))))
-    timeC("dup_bigram_q")(graft.functions.Repetition.dupFracQ(
-      graft.functions.Repetition.wordNgrams(
-        graft.functions.Repetition.wordTokens(col("text")), 2)))
-    // doc-size profile: is there a monster document?
-    Tables.documents(spark, sfDir)
-      .select(max(length(col("text"))).as("max_len"),
-        expr("percentile(length(text), 0.99)").as("p99"),
-        avg(length(col("text"))).as("avg")).show()
-  }
-
-  /** Gate-stage plan inspection: times the gate over a pre-checkpointed
-    * clean frame and counts heavy-expression occurrences in the optimized
-    * plan (the round-15 ~30x re-evaluation finding's instrument). */
-  private def corpusGate(spark: SparkSession, sfDir: String): Unit = {
-    import graft.pipeline.CorpusPipeline
-    val cfg = CorpusPipeline.Config(minQualityQ = 5000L, maxDupWordFracQ = 6500L)
-    val docs = Tables.documents(spark, sfDir).repartition(32)
-      .select(col("doc_id").cast("long").as("id"), col("text")).localCheckpoint(true)
-    val kept = time("gate_only") { CorpusPipeline.scoreAndGate(docs, cfg) }
-    val plan = kept.queryExecution.optimizedPlan.toString
-    println("SPLIT_COUNT=" + "split\\(".r.findAllIn(plan).length)
-    println("NFC_COUNT=" + "graft_nfc".r.findAllIn(plan).length)
-    println("TRANSFORM_COUNT=" + "transform\\(".r.findAllIn(plan).length)
-    println("ARRAY_DISTINCT_COUNT=" + "array_distinct".r.findAllIn(plan).length)
-    println(plan.take(6000))
-  }
-
-  /** q126 k-core peel rounds alone (skip the near-dup family). */
-  private def kcore(spark: SparkSession, sfDir: String): Unit = {
-    var undV: DataFrame = null
-    time("edge_build_fresh") {
-      undV = graft.operators.Graph.coOccurrenceEdges(
-        Tables.lineitem(spark, sfDir), "l_orderkey", "l_partkey")
-      undV
-    }
-    val und = undV
-    time("kcore_1_round") { graft.operators.Graph.kCorePeel(und, 80, 1) }
-    time("kcore_5_rounds") { graft.operators.Graph.kCorePeel(und, 80, 5) }
   }
 }

@@ -30,13 +30,6 @@ object BrFormats {
   /** dd/MM/yyyy rendering of a date/timestamp column. */
   def brDate(c: Column): Column = date_format(c, "dd/MM/yyyy")
 
-  /** Parse a BR decimal string ("1.234,56" or "1234,56") to double;
-    * unparseable → null (reference `_safe_to_float`). */
-  def parseBrDecimal(c: Column): Column = {
-    val normalized = regexp_replace(regexp_replace(trim(c), "\\.", ""), ",", ".")
-    normalized.cast("double")
-  }
-
   /** Simple comma-decimal parse (no thousands separators), the shape
     * `_safe_to_float` actually handles: "1234,56" → 1234.56. */
   def parseCommaDecimal(c: Column): Column =

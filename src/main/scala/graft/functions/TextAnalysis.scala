@@ -47,7 +47,7 @@ object TextAnalysis {
 
   /** Document quality score in [0,1]: blend of length saturation, stopword
     * density, punctuation restraint, and upper-case restraint. All-arithmetic
-    * (rounded to 4 decimals) so oracles can reproduce it exactly. */
+    * so oracles can reproduce it exactly; [[qualityScoreQ]] quantizes it. */
   private def qualityScoreRaw(c: Column): Column = {
     val len = length(c).cast("double")
     val tokens = wsTokenCount(c).cast("double")
@@ -61,8 +61,6 @@ object TextAnalysis {
     lit(0.4) * lenScore + lit(0.3) * stopScore +
       lit(0.15) * (lit(1.0) - punctPenalty) + lit(0.15) * (lit(1.0) - upperPenalty)
   }
-
-  def qualityScore(c: Column): Column = round(qualityScoreRaw(c), 4)
 
   /** Quantized score (score × 10000, floored). `floor` on the identical
     * double is engine-portable; decimal `round` is not — Spark rounds the

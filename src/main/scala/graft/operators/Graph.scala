@@ -45,6 +45,9 @@ object Graph {
       .agg(collect_list("item").as("items"))
       .where(size(col("items")) between (2, maxGroupSize))
     // In-row pair expansion: one aggregation shuffle total, no self-join.
+    // A/B against a windowed self-join at sf0.1 on a 4-core host, one
+    // interleaved pair: 3.68/2.95 s vs 5.35/2.60 s cold/warm — no resolved
+    // winner, so the single-shuffle form stays.
     sized.select(explode(expr(
       """filter(
          |  flatten(transform(items, (a, i) ->
@@ -67,8 +70,8 @@ object Graph {
     * Generate showed no win over the codegen'd branch projections —
     * the union branches also column-prune independently, which the
     * packed struct cannot. The explode form IS the right shape for
-    * endpoint AGGREGATIONS — see [[degrees]], which the `degab`
-    * interleaved microbench proved 3x cheaper that way. */
+    * endpoint AGGREGATIONS — see [[degrees]], which the round-18
+    * interleaved A/B (OPTIMIZATION_r18.md §2) measured 3x cheaper that way. */
   def symmetrize(und: DataFrame): DataFrame =
     und.select(col("u").as("src"), col("v").as("dst"))
       .union(und.select(col("v").as("src"), col("u").as("dst")))
@@ -210,12 +213,13 @@ object Graph {
       und.select(col("u").cast("long").as("u"), col("v").cast("long").as("v")))
     // Endpoint-degree via the explode form (one pass over the cached
     // edge base, both endpoints combined in the same partial map) — the
-    // round-18 `degab` microbench shape; see [[degrees]]. Materialized
-    // ONCE (node-sized): it feeds TWO broadcast builds below, and the
-    // two directed-edge consumers double that — un-cut, the plan rebuilt
-    // this aggregation 4x as broadcast inputs (round-18 after-plan nodes
-    // 3-7/11-15/20-24/28-32; the round-19 `triab` interleaved A/B reads
-    // the cut as 5.10→4.07 s cold, 1.86→1.68 s warm at sf0.1).
+    // round-18 A/B shape (OPTIMIZATION_r18.md §2); see [[degrees]].
+    // Materialized ONCE (node-sized): it feeds TWO broadcast builds below,
+    // and the two directed-edge consumers double that — un-cut, the plan
+    // rebuilt this aggregation 4x as broadcast inputs (round-18 after-plan
+    // nodes 3-7/11-15/20-24/28-32; the round-19 interleaved A/B in
+    // OPTIMIZATION_r19.md §2 reads the cut as 5.10→4.07 s cold,
+    // 1.86→1.68 s warm at sf0.1).
     val deg = degrees(u).select(col("node").as("n"), col("deg").as("d"))
       .localCheckpoint(true)
     // Direct each edge from its lower-(deg, id) endpoint. Rank packs into a
@@ -311,7 +315,7 @@ object Graph {
       // re-materializing the edge-scale frame (checkpointing edges each
       // round benched 2x slower at sf0.1). The drop checkpoint still cuts
       // the double reference (degrees + filter), keeping lineage linear.
-      // Base CACHE FORMAT adjudicated round 19 (`ProfGraph kcoreab`,
+      // Base CACHE FORMAT adjudicated round 19 (OPTIMIZATION_r19.md,
       // interleaved ×2): swapping the localCheckpoint base for the SQL
       // columnar cache (vectorized InMemoryTableScan) read 2.71 vs 2.91 s
       // and 4.58 vs 5.39 s warm in checkpoint's favor — the per-round

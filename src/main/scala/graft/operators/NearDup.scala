@@ -406,14 +406,8 @@ object NearDup {
     * published heuristic that makes prefix blocks small by construction —
     * a gram's block size is bounded by its document frequency, and
     * frequent grams are exactly the ones the prefix excludes. */
-  /** @param spreadCandidates None = auto (the few-split corpus probe
-    *   below); Some(b) = explicit override — the q103 `broadcastDegrees`
-    *   escape-hatch precedent, here so the checkpoint+spread trade can be
-    *   A/B-measured per scale point (`graft.Prof prefix-ab`) instead of
-    *   argued. */
   def prefixJaccardPairs(df: DataFrame, idCol: Column, textCol: Column,
-                         k: Int, threshold: Double,
-                         spreadCandidates: Option[Boolean] = None): DataFrame = {
+                         k: Int, threshold: Double): DataFrame = {
     require(threshold > 0 && threshold <= 1, s"threshold in (0,1], got $threshold")
     graft.plans.GraftExtensions.register(df.sparkSession)
     import org.apache.spark.sql.expressions.Window
@@ -488,7 +482,9 @@ object NearDup {
     // already carries parallelism-many splits the same checkpoint is a
     // pure barrier — it serialized the candidate build against the
     // verify side's gram build and read +2.6-3.6 s at sf1 (measured
-    // round 16) — so at scale the candidates flow lazily, as before.
+    // round 16) — so at scale the candidates flow lazily, as before. The
+    // gate's order-controlled sf0.1/sf1/sf10 A/B is recorded in BASELINE.md
+    // (round-17 q100 adjudication: spread ON wins only on few-split corpora).
     // Two materializations ON PURPOSE (round-16 review suggested fusing
     // into one cand.repartition(p).localCheckpoint — measured 1.2-1.6 s
     // WORSE at sf0.1: with the user repartition as the query's final
@@ -497,7 +493,7 @@ object NearDup {
     // plan and then reshuffles a candidate-bounded LEAF, which is
     // trivial). Probe cost is zero: the checkpointed frame is a leaf.
     val candSpread =
-      if (spreadCandidates.getOrElse(Checkpoints.fewSplit(df)))
+      if (Checkpoints.fewSplit(df))
         Checkpoints.withSpreadFloor(df.sparkSession) {
           Checkpoints.spreadForCpu(cand.localCheckpoint(eager = true))
         }

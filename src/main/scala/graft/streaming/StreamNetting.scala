@@ -291,7 +291,7 @@ object StreamNetting {
     // partitions. The five writes are mutually independent, so they
     // publish CONCURRENTLY ([[VersionedStore.publishSubs]], round-19):
     // sequential, each paid its own plan+schedule+commit round trip
-    // back to back (~55 ms inter-job driver gap each, ProfJobs).
+    // back to back (~55 ms inter-job driver gap each; OPTIMIZATION_r19.md).
     VersionedStore.publishSubs(spark, baseDir, batchId, Seq(
       "released" -> released, "pending" -> pendingOut,
       "deadletter" -> deadLetters, "axis" -> axisOut, "meta" -> metaOut))

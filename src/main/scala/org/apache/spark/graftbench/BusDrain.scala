@@ -10,10 +10,11 @@ import org.apache.spark.SparkContext
   * own test suites use between action and assertion), but the
   * `SparkContext.listenerBus` accessor is `private[spark]` — hence this
   * tiny subpackage shim instead of a poll-until-stable heuristic in
-  * `graft.Bench` (deterministic, and it cannot under-wait).
+  * the listener (deterministic, and it cannot under-wait).
   *
-  * Used ONLY by the measurement harness ([[graft.Bench]]); no operator or
-  * query code depends on Spark internals. */
+  * Used ONLY by the measurement code ([[graft.metrics.MetricsListener]]
+  * and the benchmark's trace); no operator or query code depends on Spark
+  * internals. */
 object BusDrain {
 
   /** Block until every event posted so far is delivered (or `timeoutMs`).

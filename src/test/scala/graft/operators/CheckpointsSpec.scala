@@ -42,11 +42,7 @@ class CheckpointsSpec extends SparkSpec {
       "a LocalRelation is already free — no checkpoint")
   }
 
-  // the bracket's floor reads the A/B env knob; assert against the same
-  // resolution so running the suite WITH the knob set (its stated
-  // purpose) does not fail spuriously (round-16 review)
-  private val loopFloor =
-    sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION_SIZE_LOOP", "16k")
+  private val loopFloor = Checkpoints.LoopFloor
 
   test("withSpreadFloor sets the scoped floor inside the bracket and restores after") {
     val key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
