@@ -34,7 +34,6 @@ object Mp4Codec {
   /** Sample-count cap: 4M frames (~37 h at 30 fps) per payload. */
   val MaxFrames: Int = 4 * 1024 * 1024
 
-  private def be16(b: Array[Byte], i: Int): Int = ((b(i) & 0xff) << 8) | (b(i + 1) & 0xff)
   private def be32(b: Array[Byte], i: Int): Long =
     ((b(i) & 0xffL) << 24) | ((b(i + 1) & 0xffL) << 16) | ((b(i + 2) & 0xffL) << 8) | (b(i + 3) & 0xffL)
   private def be64(b: Array[Byte], i: Int): Long = (be32(b, i) << 32) | be32(b, i + 4)

@@ -573,16 +573,6 @@ object NearDup {
       .where(col("simhash").isNotNull)
   }
 
-  /** Multiset k-grams (graft_shingles DEDUPES by design — the set family
-    * wants that, the weighted family must not): the native
-    * `graft_shingles_all` expression replaces the interpreted
-    * column-algebra chain (`transform(sequence(...), i -> concat_ws(' ',
-    * slice(words, i+1, k)))` — HOF lambdas evaluate per element outside
-    * whole-stage codegen). Same output: single-space split keeps empty
-    * tokens, <k tokens → empty array. */
-  private def multisetGrams(textCol: Column, k: Int): Column =
-    call_function("graft_shingles_all", textCol, lit(k))
-
   /** (id, n = capped total mass, gram, tf = capped term frequency) rows —
     * the weighted family's shared verification frame. `tfCap ≤ 0` = no
     * cap (n is then just the gram count).

@@ -38,7 +38,16 @@ object StreamConf {
     * value, restoring the previous conf afterward. Safe to restore
     * immediately after start: StreamExecution clones the session at
     * start, so the running query keeps the value for its lifetime while
-    * the caller's session reverts. No-op when the env is unset. */
+    * the caller's session reverts. No-op when the env is unset.
+    *
+    * Concurrency contract: the conf is set on the CALLER'S session, not a
+    * clone, so any other query planned on that session while `body` runs
+    * also sees the state-partition count as its shuffle-partition count.
+    * Two overlapping brackets on one session would also restore each
+    * other's value. So one stream starts at a time per session: the
+    * engine's entry points start their streams sequentially, and a caller
+    * that starts streams from several threads gives each its own
+    * `newSession()`. */
   def withStatePartitions[T](spark: SparkSession)(body: => T): T =
     withStatePartitions(spark, sys.env.get(StatePartitionsEnv))(body)
 

@@ -98,7 +98,6 @@ class DistinctSketchSpec extends SparkSpec {
   }
 
   test("noveltyEstimate stays within 20% of truth past k (estimator regime)") {
-    val rnd = new scala.util.Random(5)
     val ref = (1L to 3000L)
     val newSide = (2001L to 5000L) // 2000 of 3000 novel
     def sk(vals: Seq[Long]) = DistinctSketch.kmvSketch(

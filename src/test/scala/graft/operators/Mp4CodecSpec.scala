@@ -12,7 +12,6 @@ class Mp4CodecSpec extends SparkSpec {
 
   private def be32(v: Long): Array[Byte] =
     Array((v >> 24).toByte, (v >> 16).toByte, (v >> 8).toByte, v.toByte)
-  private def be16(v: Int): Array[Byte] = Array((v >> 8).toByte, v.toByte)
   private def fourcc(s: String): Array[Byte] = s.getBytes("US-ASCII")
   private def cat(parts: Array[Byte]*): Array[Byte] = parts.flatten.toArray
   private def box(tpe: String, payload: Array[Byte]): Array[Byte] =
@@ -189,7 +188,7 @@ class Mp4CodecSpec extends SparkSpec {
     assert(out(0).getStruct(1).getLong(4) == 5000L && out(0).getStruct(1).getLong(5) == 3L)
     assert(out(1).isNullAt(1))
     graft.plans.GraftExtensions.register(ss)
-    val sqlOut = df.createOrReplaceTempView("media_v")
+    df.createOrReplaceTempView("media_v")
     val viaSql = ss.sql("SELECT graft_video_meta(media).codec AS c FROM media_v WHERE media_id = 1").collect()
     assert(viaSql.head.getString(0) == "avc1")
   }

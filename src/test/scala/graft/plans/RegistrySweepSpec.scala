@@ -1,17 +1,114 @@
 package graft.plans
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.window.WindowExec
+import org.apache.spark.sql.functions.col
+import scala.collection.mutable
 
-/** Engine-wide plan audit: every registered verify query's physical plan is
-  * checked for the scale anti-patterns SURVEY §5 bans — no cartesian
-  * products and no broadcast-nested-loop joins outside the explicit
-  * allowlist (a 1-row broadcast scalar is fine; an accidental
-  * condition-less join of two corpus-scale sides is not). Catches the
-  * classic regression where a refactor drops a join condition and the
-  * planner silently degrades to O(n·m). */
-class PlanAuditSpec extends SparkSpec {
+/** The registry-wide sweep: every registered verify query is built and run
+  * ONCE per config, and four engine-wide properties are checked on those
+  * runs.
+  *
+  *  - Partitioning invariance. Every query must return the SAME rows under
+  *    spark.sql.shuffle.partitions = 4 (the test default), 7 (odd,
+  *    non-divisor) and 200 (the Spark default a user who didn't read
+  *    GraftSession would run with). Each operator claims its results don't
+  *    depend on physical partitioning (the md5-derived sampling,
+  *    GlobalRank's range-partitioned ordinals, deterministic k-means
+  *    seeds…); a regression that sneaks partition-placement dependence into
+  *    any query (spark_partition_id leaking into output, a non-total sort
+  *    order, first()-style nondeterminism) fails here by name. A partition
+  *    id only shows where the query's last stage keeps more than one
+  *    partition: AQE coalesces most sf0.001 outputs to one.
+  *  - No cartesian products and no broadcast-nested-loop joins outside the
+  *    explicit allowlist (SURVEY §5): a 1-row broadcast scalar is fine; an
+  *    accidental condition-less join of two corpus-scale sides is not.
+  *    Catches the classic regression where a refactor drops a join
+  *    condition and the planner silently degrades to O(n·m).
+  *  - Unpartitioned windows only at the allowlisted bounded-metadata sites.
+  *  - No SILENT whole-stage-codegen fallback (SURVEY §5). When a generated
+  *    stage fails to compile (Janino CompileException), Spark by default
+  *    logs and re-runs the stage interpreted — correctness holds,
+  *    throughput quietly drops (this is how q53's fused-join duplication
+  *    bug shipped unnoticed in round 5). With
+  *    `spark.sql.codegen.fallback=false` the compile error THROWS instead.
+  *
+  * The audit config (4 partitions) runs with codegen fallback off, and its
+  * plan checks read each frame's initial `executedPlan` (AQE's initial
+  * plan) before any action runs on it. Each config runs in its OWN
+  * `newSession()` (separate SQLConf over the shared context), so the shared
+  * session is never mutated and concurrently-running suites never observe
+  * the sweep's conf. That is 3 builds and 3 canonical collects per query
+  * (3 × 183 at 183 registered queries). A query that throws is recorded
+  * for its config and the sweep goes on; every failure names the query and
+  * the config. sf0.001 keeps the sweep inside CI time — the partition
+  * COUNT, not the data scale, is the variable under test.
+  */
+class RegistrySweepSpec extends SparkSpec {
+  import RegistrySweepSpec.Sweep
 
-  private val sfDir = "/root/testdata/sf0.001"
+  private val AuditPartitions = 4
+  private val Configs = Seq(AuditPartitions, 7, 200)
+
+  private def label(n: Int): String =
+    if (n == AuditPartitions) s"partitions=$n, codegen fallback off" else s"partitions=$n"
+
+  private val queries = graft.SparkEntry.queries
+  private val names = queries.keys.toSeq.sorted
+
+  /** Order-insensitive, partitioning-insensitive canonical form: columns
+    * sorted by name and cast to string, rows rendered and sorted. */
+  private def canonical(df: DataFrame): String = {
+    val cols = df.columns.sorted.map(c => col(s"`$c`").cast("string"))
+    df.select(cols.toIndexedSeq: _*)
+      .collect()
+      .map(_.toSeq.map(v => if (v == null) "NULL" else v.toString).mkString("|"))
+      .sorted
+      .mkString("\n")
+  }
+
+  private def attempt[T](body: => T): Either[String, T] =
+    try Right(body)
+    catch { case e: Throwable =>
+      Left(s"${e.getClass.getSimpleName} ${String.valueOf(e.getMessage).take(200)}") }
+
+  private lazy val sweep: Sweep = {
+    val plans = Map.newBuilder[String, Either[String, SparkPlan]]
+    val rows = Configs.map { n =>
+      val s = ss.newSession()
+      s.conf.set("spark.sql.shuffle.partitions", n.toString)
+      if (n == AuditPartitions) s.conf.set("spark.sql.codegen.fallback", "false")
+      GraftExtensions.register(s)
+      n -> names.map { name =>
+        val df = attempt(queries(name)(s, smallSfDir))
+        if (n == AuditPartitions)
+          plans += name -> df.flatMap(d => attempt(d.queryExecution.executedPlan))
+        name -> df.flatMap(d => attempt(canonical(d)))
+      }.toMap
+    }.toMap
+    Sweep(plans.result(), rows)
+  }
+
+  test("all registered queries are invariant under shuffle-partition sweep (4/7/200)") {
+    val base = sweep.rows(AuditPartitions)
+    val failed = for {
+      n <- Configs
+      name <- names
+      err <- sweep.rows(n)(name).left.toOption
+    } yield s"$name: threw at ${label(n)}: $err"
+    val moved = for {
+      n <- Configs.tail
+      name <- names
+      a <- base(name).toOption
+      b <- sweep.rows(n)(name).toOption
+      if a != b
+    } yield s"$name: result moved between partitions=$AuditPartitions and partitions=$n"
+    assert(failed.isEmpty && moved.isEmpty,
+      s"partitioning-dependent or failing queries:\n${(failed ++ moved).mkString("\n")}")
+  }
 
   /** Queries allowed a BroadcastNestedLoopJoin, with why. */
   private val bnljAllowed: Map[String, String] = Map(
@@ -71,22 +168,28 @@ class PlanAuditSpec extends SparkSpec {
       "the q124/q145 single-row build shape"))
 
   test("no registered query plans a cartesian product or stray BNLJ") {
-    val offenders = scala.collection.mutable.ArrayBuffer.empty[String]
-    val bnljHits = scala.collection.mutable.Set.empty[String]
-    graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      val plan = fn(ss, sfDir).queryExecution.executedPlan.toString
-      if (plan.contains("CartesianProduct"))
-        offenders += s"$name: CartesianProduct"
-      if (plan.contains("BroadcastNestedLoopJoin")) {
-        bnljHits += name
-        if (!bnljAllowed.contains(name))
-          offenders += s"$name: BroadcastNestedLoopJoin"
+    val offenders = mutable.ArrayBuffer.empty[String]
+    val bnljHits = mutable.Set.empty[String]
+    names.foreach { name =>
+      sweep.plans(name) match {
+        case Left(err) => offenders += s"$name: not planned: $err"
+        case Right(p) =>
+          val plan = p.toString
+          if (plan.contains("CartesianProduct"))
+            offenders += s"$name: CartesianProduct"
+          if (plan.contains("BroadcastNestedLoopJoin")) {
+            bnljHits += name
+            if (!bnljAllowed.contains(name))
+              offenders += s"$name: BroadcastNestedLoopJoin"
+          }
       }
     }
-    assert(offenders.isEmpty, s"scale anti-patterns:\n${offenders.mkString("\n")}")
+    assert(offenders.isEmpty,
+      s"scale anti-patterns (${label(AuditPartitions)}):\n${offenders.mkString("\n")}")
     val stale = bnljAllowed.keySet -- bnljHits
     assert(stale.isEmpty,
-      s"allowlist entries no longer planning a BroadcastNestedLoopJoin (prune them): $stale")
+      s"allowlist entries no longer planning a BroadcastNestedLoopJoin (prune them; " +
+        s"${label(AuditPartitions)}): $stale")
   }
 
   /** Queries allowed an unpartitioned WindowExec (single-partition window),
@@ -125,9 +228,6 @@ class PlanAuditSpec extends SparkSpec {
       "two bounded-metadata window nodes (the q108 double-branch shape)"))
 
   test("unpartitioned windows appear only at the allowlisted bounded-metadata sites") {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    import org.apache.spark.sql.execution.window.WindowExec
     // AQE wraps the real plan in AdaptiveSparkPlanExec, which exposes no
     // children to TreeNode.collect — descend into it explicitly.
     def unpartWindows(p: SparkPlan): Seq[WindowExec] =
@@ -135,20 +235,44 @@ class PlanAuditSpec extends SparkSpec {
         case w: WindowExec if w.partitionSpec.isEmpty => Seq(w)
         case a: AdaptiveSparkPlanExec => unpartWindows(a.executedPlan)
       }.flatten
-    val offenders = scala.collection.mutable.ArrayBuffer.empty[String]
-    val hits = scala.collection.mutable.Set.empty[String]
-    graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      val unpart = unpartWindows(fn(ss, sfDir).queryExecution.executedPlan)
-      if (unpart.nonEmpty) {
-        hits += name
-        if (!globalWindowAllowed.contains(name))
-          offenders += s"$name: ${unpart.size} unpartitioned WindowExec node(s)"
+    val offenders = mutable.ArrayBuffer.empty[String]
+    val hits = mutable.Set.empty[String]
+    names.foreach { name =>
+      sweep.plans(name) match {
+        case Left(err) => offenders += s"$name: not planned: $err"
+        case Right(p) =>
+          val unpart = unpartWindows(p)
+          if (unpart.nonEmpty) {
+            hits += name
+            if (!globalWindowAllowed.contains(name))
+              offenders += s"$name: ${unpart.size} unpartitioned WindowExec node(s)"
+          }
       }
     }
     assert(offenders.isEmpty,
-      s"single-partition window outside the allowlist (100TB cliff):\n${offenders.mkString("\n")}")
+      s"single-partition window outside the allowlist (100TB cliff; ${label(AuditPartitions)}):\n" +
+        offenders.mkString("\n"))
     val stale = globalWindowAllowed.keySet -- hits
     assert(stale.isEmpty,
-      s"allowlist entries no longer planning an unpartitioned window (prune them): $stale")
+      s"allowlist entries no longer planning an unpartitioned window (prune them; " +
+        s"${label(AuditPartitions)}): $stale")
   }
+
+  test("every registered query executes with codegen fallback disabled") {
+    val failures = for {
+      name <- names
+      err <- sweep.rows(AuditPartitions)(name).left.toOption
+    } yield s"$name: $err"
+    assert(failures.isEmpty,
+      s"queries failed under codegen-only execution (${label(AuditPartitions)}):\n" +
+        failures.mkString("\n"))
+  }
+}
+
+object RegistrySweepSpec {
+
+  /** The sweep's results: each query's initial plan at the audit config,
+    * and its canonical rows per config — or the error that stopped it. */
+  final case class Sweep(plans: Map[String, Either[String, SparkPlan]],
+                         rows: Map[Int, Map[String, Either[String, String]]])
 }
