@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-round benchmark: times every registered query at SPARK_GRAFT_SF_DIR,
   * prints one JSON line (driver contract). Session uses the engine's scale
   * defaults (AQE, broadcast threshold); a warmup action runs first so JVM /

@@ -151,17 +151,7 @@ object Checkpoints {
   def materializeOnce(df: DataFrame): DataFrame = {
     def scanCheap(p: LogicalPlan): Boolean = p match {
       case _: LogicalRDD | _: LocalRelation => true
-      // Generate (explode) is as narrow as Project — one pass over the
-      // child, no shuffle — so re-running it per consumer costs one
-      // cached-block scan, same as the other narrow cases. Caveat this
-      // predicate accepts: a HIGH-fan-out generator (posexplode of large
-      // arrays) still re-expands its rows per consumer; the operators
-      // here only pass bounded fan-out explodes (≤2 endpoint structs per
-      // edge), where the expansion is cheaper than a second full copy of
-      // the frame in block storage.
-      case _: Project | _: Filter | _: Union |
-           _: org.apache.spark.sql.catalyst.plans.logical.Generate =>
-        p.children.forall(scanCheap)
+      case _: Project | _: Filter | _: Union => p.children.forall(scanCheap)
       case _ => false
     }
     if (scanCheap(df.queryExecution.optimizedPlan)) df

@@ -1,8 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** One-pass bounded-memory frequent-item detection: the Misra-Gries /
   * Space-Saving summary, distributed as per-partition sketches merged by

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
-import org.apache.spark.sql.functions._
 
 /** Distributed Pareto skyline: the rows not dominated on a set of
   * MAXIMIZED criteria (q dominates p iff q ≥ p on every dimension and

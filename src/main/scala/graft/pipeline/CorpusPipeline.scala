@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.{PiiScrub, Repetition, TextAnalysis}
-import graft.operators.{Decontaminate, Dedup, DupClusters, NearDup, Sampling}
+import graft.operators.{Checkpoints, Decontaminate, Dedup, DupClusters, NearDup, Sampling}
 
 /** End-to-end training-corpus preparation — the LLM-data sibling of
   * [[MailingPipeline]]: one declarative flow from raw documents to
@@ -95,7 +95,7 @@ object CorpusPipeline {
     // silently turned the old normalized−kept drop-rate reading into a
     // constant 0; the input count gets its own stage name instead.
     val ingested = tracked("ingested",
-      spreadForCpu(docs.select(idCol.cast("long").as("id"), textCol.as("text"))))
+      Checkpoints.spreadForCpu(docs.select(idCol.cast("long").as("id"), textCol.as("text"))))
     val gated = tracked("lang_quality_kept", scoreAndGate(ingested, cfg))
 
     // 2. normalize + scrub the survivors (narrow), then the eager
@@ -135,11 +135,6 @@ object CorpusPipeline {
     val split = Sampling.withSplit(withCanon, col("canon_id"), cfg.trainPct, cfg.validPct)
     tracked("split_total", split)
   }
-
-  /** See [[graft.operators.Checkpoints.spreadForCpu]] — shared with the
-    * shingle/signature operator family, same rationale. */
-  private def spreadForCpu(df: DataFrame): DataFrame =
-    graft.operators.Checkpoints.spreadForCpu(df)
 
   /** Stage-2 gate as a standalone transform — language allowlist, minimum
     * quality, repetition caps — appending (lang, score_q, ws_tokens) and

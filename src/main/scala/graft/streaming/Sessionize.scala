@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 
 /** Stateful sessionization (SURVEY §2b S2): `mapGroupsWithState` over
   * per-user event streams, counting sessions split by a 30-minute gap —

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -28,8 +27,7 @@ object StreamAbTest {
 
   /** Latest cumulative arms (v, n, c), if any batch committed. */
   def readLatestArms(spark: SparkSession, baseDir: String): Option[DataFrame] =
-    VersionedStore.committedVersions(spark, baseDir).lastOption
-      .map(p => spark.read.parquet(new Path(p, "arms").toString))
+    VersionedStore.readLatest(spark, baseDir, "arms")
 
   /** All per-batch verdict rows appended so far (the monitor table;
     * compaction-aware union — see [[VersionedStore.readLog]]). */
@@ -45,20 +43,17 @@ object StreamAbTest {
     * arms + this batch's verdict rows. Replay-idempotent. */
   def applyBatch(batch: DataFrame, variantCol: Column, successCol: Column,
                  baseDir: String, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    if (VersionedStore.isCommitted(spark, baseDir, batchId)) return
-    val batchArms = batch
-      .select(variantCol.as("v"), successCol.cast("long").as("ok"))
-      .groupBy("v").agg(count(lit(1)).as("n"), sum("ok").as("c"))
-    val arms = readLatestArms(spark, baseDir)
-      .map(prev => prev.unionByName(batchArms)
-        .groupBy("v").agg(sum("n").as("n"), sum("c").as("c")))
-      .getOrElse(batchArms)
-      .localCheckpoint(true)
-    val verdicts = AbTest.zFromArms(arms).withColumn("batch_id", lit(batchId))
-    VersionedStore.publish(spark, baseDir, batchId) { target =>
-      arms.write.parquet(new Path(target, "arms").toString)
-      verdicts.write.parquet(new Path(target, "verdicts").toString)
+    VersionedStore.commitBatch(batch.sparkSession, baseDir, batchId) { latest =>
+      val batchArms = batch
+        .select(variantCol.as("v"), successCol.cast("long").as("ok"))
+        .groupBy("v").agg(count(lit(1)).as("n"), sum("ok").as("c"))
+      val arms = latest("arms")
+        .map(prev => prev.unionByName(batchArms)
+          .groupBy("v").agg(sum("n").as("n"), sum("c").as("c")))
+        .getOrElse(batchArms)
+        .localCheckpoint(true)
+      Seq("arms" -> arms,
+        "verdicts" -> AbTest.zFromArms(arms).withColumn("batch_id", lit(batchId)))
     }
   }
 

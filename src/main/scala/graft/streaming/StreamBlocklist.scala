@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -31,8 +30,7 @@ object StreamBlocklist {
 
   /** Latest committed (key, n_critical) counts, if any batch committed. */
   def readLatestCounts(spark: SparkSession, baseDir: String): Option[DataFrame] =
-    VersionedStore.committedVersions(spark, baseDir).lastOption
-      .map(p => spark.read.parquet(new Path(p, "counts").toString))
+    VersionedStore.readLatest(spark, baseDir, "counts")
 
   /** The blocked-key set at `threshold`, read off the latest store
     * version — the frame [[graft.operators.Blocklist.removeByStatusThreshold]]
@@ -56,20 +54,17 @@ object StreamBlocklist {
   def applyBatch(batch: DataFrame, keyCol: Column, statusCol: Column,
                  criticalStatuses: Seq[String], baseDir: String,
                  batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    if (VersionedStore.isCommitted(spark, baseDir, batchId)) return
-    val delta = batch
-      .filter(TextClean.normKey(statusCol)
-        .isin(criticalStatuses.map(_.toLowerCase): _*))
-      .groupBy(keyCol.as("key")).agg(count(lit(1)).as("n_critical"))
-    val merged = readLatestCounts(spark, baseDir)
-      .map(prev => prev.unionByName(delta)
-        .groupBy("key").agg(sum("n_critical").as("n_critical")))
-      .getOrElse(delta)
+    VersionedStore.commitBatch(batch.sparkSession, baseDir, batchId) { latest =>
+      val delta = batch
+        .filter(TextClean.normKey(statusCol)
+          .isin(criticalStatuses.map(_.toLowerCase): _*))
+        .groupBy(keyCol.as("key")).agg(count(lit(1)).as("n_critical"))
       // one write consumer, no eager checkpoint: checkpoint-then-write
       // materializes twice and costs an extra job per batch (round-18)
-    VersionedStore.publish(spark, baseDir, batchId) { target =>
-      merged.write.parquet(new Path(target, "counts").toString)
+      Seq("counts" -> latest("counts")
+        .map(prev => prev.unionByName(delta)
+          .groupBy("key").agg(sum("n_critical").as("n_critical")))
+        .getOrElse(delta))
     }
   }
 

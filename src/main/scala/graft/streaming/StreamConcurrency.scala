@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -28,8 +27,7 @@ object StreamConcurrency {
 
   /** Latest committed delta store (d, n_start, n_freed), if any. */
   def readLatestDeltas(spark: SparkSession, baseDir: String): Option[DataFrame] =
-    VersionedStore.committedVersions(spark, baseDir).lastOption
-      .map(p => spark.read.parquet(p.toString))
+    VersionedStore.readLatest(spark, baseDir, "")
 
   /** The current daily-actives view off the latest store. */
   def activeDaily(spark: SparkSession, baseDir: String): Option[DataFrame] =
@@ -39,17 +37,14 @@ object StreamConcurrency {
     * store, published as `b<batchId>`. Replay-idempotent. */
   def applyBatch(batch: DataFrame, startCol: Column, endCol: Column,
                  baseDir: String, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    if (VersionedStore.isCommitted(spark, baseDir, batchId)) return
-    val dl = Intervals.deltas(batch, startCol, endCol)
-    val merged = readLatestDeltas(spark, baseDir)
-      .map(prev => prev.unionByName(dl).groupBy("d")
-        .agg(sum("n_start").as("n_start"), sum("n_freed").as("n_freed")))
-      .getOrElse(dl)
+    VersionedStore.commitBatch(batch.sparkSession, baseDir, batchId) { latest =>
+      val dl = Intervals.deltas(batch, startCol, endCol)
       // one write consumer, no eager checkpoint: checkpoint-then-write
       // materializes twice and costs an extra job per batch (round-18)
-    VersionedStore.publish(spark, baseDir, batchId) { target =>
-      merged.write.parquet(target.toString)
+      Seq("" -> latest("")
+        .map(prev => prev.unionByName(dl).groupBy("d")
+          .agg(sum("n_start").as("n_start"), sum("n_freed").as("n_freed")))
+        .getOrElse(dl))
     }
   }
 

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.operators.IncrementalDedup
@@ -25,15 +24,16 @@ import graft.operators.IncrementalDedup
   * probed through the LSH band join, never re-shingled) plus one
   * store rewrite. The store rewrite is the deliberate simplicity here —
   * an appendable store (per-batch signature delta dirs unioned at read)
-  * drops that cost to O(batch) too; [[readLatestStore]] is the single
-  * seam to swap.
+  * drops that cost to O(batch) too. The swap touches two reads: the
+  * `store` sub that [[applyBatch]] takes from
+  * [[VersionedStore.commitBatch]]'s newest-version reader, and
+  * [[readLatestStore]].
   */
 object StreamDedupAdmit {
 
   /** Latest committed signature store, if any batch has committed. */
   def readLatestStore(spark: SparkSession, baseDir: String): Option[DataFrame] =
-    VersionedStore.committedVersions(spark, baseDir).lastOption
-      .map(p => spark.read.parquet(new Path(p, "store").toString))
+    VersionedStore.readLatest(spark, baseDir, "store")
 
   /** Every admitted row across all committed batches — the deduplicated
     * corpus the stream has built so far (compaction-aware union; see
@@ -52,15 +52,12 @@ object StreamDedupAdmit {
   def applyBatch(batch: DataFrame, idCol: Column, textCol: Column, baseDir: String,
                  batchId: Long, k: Int, numHashes: Int, rowsPerBand: Int,
                  minAgree: Int, maxBucketSize: Long = Long.MaxValue): Unit = {
-    val spark = batch.sparkSession
-    if (VersionedStore.isCommitted(spark, baseDir, batchId)) return // replayed batch
-    val store = readLatestStore(spark, baseDir)
-      .getOrElse(IncrementalDedup.emptyStore(spark, k, numHashes))
-    val adm = IncrementalDedup.admit(batch, idCol, textCol, store,
-      k, numHashes, rowsPerBand, minAgree, maxBucketSize)
-    VersionedStore.publish(spark, baseDir, batchId) { target =>
-      adm.store.write.parquet(new Path(target, "store").toString)
-      adm.admitted.write.parquet(new Path(target, "admitted").toString)
+    VersionedStore.commitBatch(batch.sparkSession, baseDir, batchId) { latest =>
+      val store = latest("store")
+        .getOrElse(IncrementalDedup.emptyStore(batch.sparkSession, k, numHashes))
+      val adm = IncrementalDedup.admit(batch, idCol, textCol, store,
+        k, numHashes, rowsPerBand, minAgree, maxBucketSize)
+      Seq("store" -> adm.store, "admitted" -> adm.admitted)
     }
   }
 

@@ -57,19 +57,6 @@ import org.apache.spark.sql.streaming.StreamingQuery
   */
 object StreamNetting {
 
-  /** Latest committed state substore, if any; state reads the LAST
-    * version only (pending/axis/meta are state, not logs). */
-  private def readLatest(spark: SparkSession, baseDir: String,
-                         sub: String): Option[DataFrame] =
-    VersionedStore.committedVersions(spark, baseDir).lastOption
-      .map(p => spark.read.parquet(new Path(p, sub).toString))
-
-  /** Union of a LOG substore: compaction + live versions (see
-    * [[VersionedStore.readLog]]). */
-  private def readLog(spark: SparkSession, baseDir: String,
-                      sub: String): Option[DataFrame] =
-    VersionedStore.readLog(spark, baseDir, sub)
-
   /** Compact the released/dead-letter logs: every committed version but
     * the newest collapses into one directory (the round-16 verdict's
     * unbounded small-files walk — one directory per micro-batch for the
@@ -82,13 +69,13 @@ object StreamNetting {
     * every net_cents ≥ 0, ready for [[StreamRemittance.applyBatch]].
     * None before the first commit. */
   def readReleased(spark: SparkSession, baseDir: String): Option[DataFrame] =
-    readLog(spark, baseDir, "released")
+    VersionedStore.readLog(spark, baseDir, "released")
 
   /** Past-horizon claw remainders dead-lettered so far — (key, id, ts,
     * cents), cents > 0 = unabsorbed claw-back, id/ts = the latest
     * released refund row the remainder is attributed to. */
   def readDeadLetters(spark: SparkSession, baseDir: String): Option[DataFrame] =
-    readLog(spark, baseDir, "deadletter")
+    VersionedStore.readLog(spark, baseDir, "deadletter")
 
   /** One micro-batch: buffer, net, release, dead-letter, publish.
     * Returns THIS batch's released rows (read back from the committed
@@ -102,13 +89,20 @@ object StreamNetting {
                  tsCol: Column, amountCol: Column, horizonSec: Long,
                  baseDir: String, batchId: Long): DataFrame = {
     val spark = batch.sparkSession
-    val target = new Path(VersionedStore.versionDir(baseDir, batchId), "released").toString
-    if (VersionedStore.isCommitted(spark, baseDir, batchId))
-      return spark.read.parquet(target)
+    val version = VersionedStore.commitBatch(spark, baseDir, batchId)(
+      nettedSubs(batch, keyCol, idCol, tsCol, amountCol, horizonSec, _))
+    spark.read.parquet(new Path(version, "released").toString)
+  }
 
+  /** The version [[applyBatch]] commits — (sub, frame) per sub-store —
+    * from the batch and the newest committed state. */
+  private def nettedSubs(batch: DataFrame, keyCol: Column, idCol: Column,
+                         tsCol: Column, amountCol: Column, horizonSec: Long,
+                         latest: String => Option[DataFrame]): Seq[(String, DataFrame)] = {
+    val spark = batch.sparkSession
     val newRows = batch.select(keyCol.as("key"), idCol.as("id"),
       tsCol.as("ts"), round(amountCol * 100).cast("long").as("c"))
-    val rows = readLatest(spark, baseDir, "pending").fold(newRows)(_.unionByName(newRows))
+    val rows = latest("pending").fold(newRows)(_.unionByName(newRows))
     // Axis schema: (key, c_raw, f_net, dref_id, dref_ts) — dref is the
     // latest released refund whose claw is still outstanding (f_net >
     // c_raw), carried so a LATER batch can attribute the write-off.
@@ -116,7 +110,7 @@ object StreamNetting {
     // before round 15 lack the dref columns — add them as nulls, which
     // the expiry test treats as never-expiring (pre-migration deficits
     // only exist transiently with pending absorbers).
-    val axis0 = readLatest(spark, baseDir, "axis").getOrElse {
+    val axis0 = latest("axis").getOrElse {
       import org.apache.spark.sql.types.{LongType, StructField, StructType}
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         StructType(Seq(StructField("key", rows.schema("key").dataType),
@@ -135,7 +129,7 @@ object StreamNetting {
     // micro-batch (round-19 job audit); max over the union is the same
     // number (unix_millis == Timestamp.getTime, and an all-null batch
     // falls back to the stored value exactly as before).
-    val prevMaxDf = readLatest(spark, baseDir, "meta")
+    val prevMaxDf = latest("meta")
       .getOrElse(spark.range(0).select(col("id").as("max_ts_ms")))
     val batchMax = rows.agg(max(unix_millis(col("ts"))).as("max_ts_ms"))
       .unionByName(prevMaxDf.select(col("max_ts_ms")))
@@ -288,14 +282,10 @@ object StreamNetting {
     // Every write source is a narrow projection/filter over the two
     // eager checkpoints above (netted, deltas) — no extra checkpoint
     // per output frame; each write computes its rows once off cached
-    // partitions. The five writes are mutually independent, so they
-    // publish CONCURRENTLY ([[VersionedStore.publishSubs]], round-19):
-    // sequential, each paid its own plan+schedule+commit round trip
-    // back to back (~55 ms inter-job driver gap each; OPTIMIZATION_r19.md).
-    VersionedStore.publishSubs(spark, baseDir, batchId, Seq(
-      "released" -> released, "pending" -> pendingOut,
-      "deadletter" -> deadLetters, "axis" -> axisOut, "meta" -> metaOut))
-    spark.read.parquet(target)
+    // partitions. The five writes are mutually independent, so
+    // [[VersionedStore.commitBatch]] publishes them concurrently.
+    Seq("released" -> released, "pending" -> pendingOut,
+      "deadletter" -> deadLetters, "axis" -> axisOut, "meta" -> metaOut)
   }
 
   /** Wire the netting stage alone: raw postings/refunds in, horizon-held

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
@@ -71,40 +70,33 @@ object StreamPrivacyGate {
       }
   }
 
-  /** Latest committed running totals: (grp, n_entities, n_rows, sum_v).
-    * Versioning/commit mechanics are the shared [[VersionedStore]]
-    * protocol (this gate predates the helper; it now delegates, so the
-    * commit-marker semantics cannot drift from S17/S19/S20). */
+  /** Latest committed running totals: (grp, n_entities, n_rows, sum_v). */
   def readTotals(spark: SparkSession, stateDir: String): Option[DataFrame] =
-    VersionedStore.committedVersions(spark, stateDir).lastOption
-      .map(p => spark.read.parquet(p.toString))
+    VersionedStore.readLatest(spark, stateDir, "")
 
   /** Stage 2 (one micro-batch): fold a batch of deltas into the published
     * running totals under `stateDir/b<batchId>`. Skips if that version is
     * already committed — replay-idempotent. Public so the spec and batch
     * backfills drive the exact code the stream runs. */
   def applyBatch(deltas: DataFrame, stateDir: String, batchId: Long): Unit = {
-    val spark = deltas.sparkSession
-    if (VersionedStore.isCommitted(spark, stateDir, batchId)) return
-    val batchAgg = deltas.groupBy("grp")
-      .agg(sum(when(col("newEntity"), 1L).otherwise(0L)).as("n_entities"),
-        sum(col("dn")).as("n_rows"), sum(col("dsum")).as("sum_v"))
-    val merged = readTotals(spark, stateDir) match {
-      case None => batchAgg
-      case Some(prev) =>
-        prev.select(col("grp"), col("n_entities").as("pe"), col("n_rows").as("pn"),
-            col("sum_v").as("ps"))
-          .join(batchAgg, Seq("grp"), "full_outer")
-          .select(col("grp"),
-            (coalesce(col("pe"), lit(0L)) + coalesce(col("n_entities"), lit(0L))).as("n_entities"),
-            (coalesce(col("pn"), lit(0L)) + coalesce(col("n_rows"), lit(0L))).as("n_rows"),
-            (coalesce(col("ps"), lit(0L)) + coalesce(col("sum_v"), lit(0L))).as("sum_v"))
-    }
-    // Merge reads the previous version lazily; materialize before publish
-    // so the write never interleaves with its own read.
-    val out = merged.localCheckpoint(true)
-    VersionedStore.publish(spark, stateDir, batchId) { target =>
-      out.write.parquet(target.toString)
+    VersionedStore.commitBatch(deltas.sparkSession, stateDir, batchId) { latest =>
+      val batchAgg = deltas.groupBy("grp")
+        .agg(sum(when(col("newEntity"), 1L).otherwise(0L)).as("n_entities"),
+          sum(col("dn")).as("n_rows"), sum(col("dsum")).as("sum_v"))
+      val merged = latest("") match {
+        case None => batchAgg
+        case Some(prev) =>
+          prev.select(col("grp"), col("n_entities").as("pe"), col("n_rows").as("pn"),
+              col("sum_v").as("ps"))
+            .join(batchAgg, Seq("grp"), "full_outer")
+            .select(col("grp"),
+              (coalesce(col("pe"), lit(0L)) + coalesce(col("n_entities"), lit(0L))).as("n_entities"),
+              (coalesce(col("pn"), lit(0L)) + coalesce(col("n_rows"), lit(0L))).as("n_rows"),
+              (coalesce(col("ps"), lit(0L)) + coalesce(col("sum_v"), lit(0L))).as("sum_v"))
+      }
+      // Merge reads the previous version lazily; materialize before publish
+      // so the write never interleaves with its own read.
+      Seq("" -> merged.localCheckpoint(true))
     }
   }
 

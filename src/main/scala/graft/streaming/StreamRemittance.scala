@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -63,34 +62,30 @@ object StreamRemittance {
     * writes the new name; one-way migration, no data change — the column
     * always held the cumulative received total). */
   def readLatestTotals(spark: SparkSession, baseDir: String): Option[DataFrame] =
-    VersionedStore.committedVersions(spark, baseDir).lastOption
-      .map(p => spark.read.parquet(new Path(p, "totals").toString))
-      .map(df => if (df.columns.contains("paid_cents"))
-        df.withColumnRenamed("paid_cents", "received_cents") else df)
+    VersionedStore.readLatest(spark, baseDir, "totals").map(renamePaid)
 
-  /** Union of one LOG sub-store across the compaction and committed
-    * versions (missing sub-dirs skipped — sub-stores added later, like
-    * `rejects`, read None over an all-pre-upgrade store); see
-    * [[VersionedStore.readLog]]. */
-  private def readVersioned(spark: SparkSession, baseDir: String,
-                            sub: String): Option[DataFrame] =
-    VersionedStore.readLog(spark, baseDir, sub)
+  private def renamePaid(totals: DataFrame): DataFrame =
+    if (totals.columns.contains("paid_cents"))
+      totals.withColumnRenamed("paid_cents", "received_cents")
+    else totals
 
   /** Compact the allocation/reject logs (one directory per micro-batch
     * otherwise); replay-safe between batches — [[VersionedStore.compactLogs]]. */
   def compact(spark: SparkSession, baseDir: String): Boolean =
     VersionedStore.compactLogs(spark, baseDir, Seq("alloc", "rejects"))
 
-  /** Every allocation row committed so far (union over versions) —
-    * (key, inv_id, pay_id, alloc_cents). None before the first commit. */
+  /** Every allocation row committed so far (compaction-aware union over
+    * versions, see [[VersionedStore.readLog]]) — (key, inv_id, pay_id,
+    * alloc_cents). None before the first commit. */
   def readAllocations(spark: SparkSession, baseDir: String): Option[DataFrame] =
-    readVersioned(spark, baseDir, "alloc")
+    VersionedStore.readLog(spark, baseDir, "alloc")
 
   /** Negative (refund/chargeback) rows dead-lettered so far — (key,
     * pay_id, ts, cents), cents < 0 — for the upstream netting job to
-    * reconcile. None before the first commit. */
+    * reconcile. None before the first commit; versions without a
+    * `rejects` dir are skipped. */
   def readRejects(spark: SparkSession, baseDir: String): Option[DataFrame] =
-    readVersioned(spark, baseDir, "rejects")
+    VersionedStore.readLog(spark, baseDir, "rejects")
 
   /** One micro-batch of payments against the static invoice-interval
     * ledger (build it once with [[Remittance.invoiceIntervals]]).
@@ -101,43 +96,41 @@ object StreamRemittance {
                  payTs: Column, payAmount: Column,
                  invIntervals: DataFrame, baseDir: String,
                  batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    if (VersionedStore.isCommitted(spark, baseDir, batchId)) return
-    val prev = readLatestTotals(spark, baseDir)
-    val cents = round(payAmount * 100).cast("long")
-    val rejects = batch.where(cents < 0)
-      .select(pKey.as("key"), payId.as("pay_id"), payTs.as("ts"), cents.as("cents"))
-    // null amounts stay on the main path (they become zero-width intervals
-    // and allocate nothing — the batch operator's existing behavior)
-    val clean = batch.where(cents.isNull || cents >= 0)
-    val rel = Remittance.paymentIntervals(clean, pKey, payId, payTs, payAmount)
-    // shift this batch's relative intervals by the debtor's axis offset
-    val pay = prev match {
-      case None => rel
-      case Some(t) => rel.join(t.select(col("key"), col("received_cents")), Seq("key"), "left")
-        .select(col("key"), col("pay_id"),
-          (col("pay_lo") + coalesce(col("received_cents"), lit(0L))).as("pay_lo"),
-          (col("pay_hi") + coalesce(col("received_cents"), lit(0L))).as("pay_hi"))
+    VersionedStore.commitBatch(batch.sparkSession, baseDir, batchId) { latest =>
+      val prev = latest("totals").map(renamePaid)
+      val cents = round(payAmount * 100).cast("long")
+      val rejects = batch.where(cents < 0)
+        .select(pKey.as("key"), payId.as("pay_id"), payTs.as("ts"), cents.as("cents"))
+      // null amounts stay on the main path (they become zero-width intervals
+      // and allocate nothing — the batch operator's existing behavior)
+      val clean = batch.where(cents.isNull || cents >= 0)
+      val rel = Remittance.paymentIntervals(clean, pKey, payId, payTs, payAmount)
+      // shift this batch's relative intervals by the debtor's axis offset
+      val pay = prev match {
+        case None => rel
+        case Some(t) => rel.join(t.select(col("key"), col("received_cents")), Seq("key"), "left")
+          .select(col("key"), col("pay_id"),
+            (col("pay_lo") + coalesce(col("received_cents"), lit(0L))).as("pay_lo"),
+            (col("pay_hi") + coalesce(col("received_cents"), lit(0L))).as("pay_hi"))
+      }
+      val alloc = Remittance.allocate(invIntervals, pay)
+      val batchTotals = pay.groupBy("key").agg(max(col("pay_hi")).as("received_cents"))
+      val totals = prev match {
+        case None => batchTotals
+        case Some(t) => t.unionByName(batchTotals)
+          .groupBy("key").agg(max(col("received_cents")).as("received_cents"))
+      }
+      // Each frame feeds exactly ONE write: no eager checkpoint first —
+      // checkpoint-then-write materializes the rows twice (cache pass +
+      // write pass) and pays an extra job per sub-store per micro-batch
+      // for frames nothing else consumes (round-18 job audit: applyBatch
+      // ran 3 extra jobs/batch on frames with a single downstream write).
+      // The three writes are independent of one another, so they publish
+      // concurrently: totals and alloc overlap their shared `pay`
+      // recompute and their plan+schedule+commit round trips instead of
+      // paying them back to back.
+      Seq("totals" -> totals, "alloc" -> alloc, "rejects" -> rejects)
     }
-    val alloc = Remittance.allocate(invIntervals, pay)
-    val batchTotals = pay.groupBy("key").agg(max(col("pay_hi")).as("received_cents"))
-    val totals = prev match {
-      case None => batchTotals
-      case Some(t) => t.unionByName(batchTotals)
-        .groupBy("key").agg(max(col("received_cents")).as("received_cents"))
-    }
-    // Each frame feeds exactly ONE write: no eager checkpoint first —
-    // checkpoint-then-write materializes the rows twice (cache pass +
-    // write pass) and pays an extra job per sub-store per micro-batch
-    // for frames nothing else consumes (round-18 job audit: applyBatch
-    // ran 3 extra jobs/batch on frames with a single downstream write).
-    // The three writes are independent of one another, so they publish
-    // CONCURRENTLY ([[VersionedStore.publishSubs]], round-19): totals
-    // and alloc overlap their shared `pay` recompute and their
-    // plan+schedule+commit round trips instead of paying them back to
-    // back.
-    VersionedStore.publishSubs(spark, baseDir, batchId, Seq(
-      "totals" -> totals, "alloc" -> alloc, "rejects" -> rejects))
   }
 
   /** One micro-batch through the NETTED path: the [[StreamNetting]] stage

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.operators.{CountMin, QuantileSketch}
@@ -27,34 +26,29 @@ object StreamSketch {
 
   /** Latest committed CMS cells (j, bucket, n), if any. */
   def readLatestCms(spark: SparkSession, baseDir: String): Option[DataFrame] =
-    VersionedStore.committedVersions(spark, baseDir).lastOption
-      .map(p => spark.read.parquet(new Path(p, "cms").toString))
+    VersionedStore.readLatest(spark, baseDir, "cms")
 
   /** Latest committed quantile-sketch buckets (grp, bucket, n), if any. */
   def readLatestQuantileSketch(spark: SparkSession, baseDir: String): Option[DataFrame] =
-    VersionedStore.committedVersions(spark, baseDir).lastOption
-      .map(p => spark.read.parquet(new Path(p, "quant").toString))
+    VersionedStore.readLatest(spark, baseDir, "quant")
 
   /** One micro-batch: sketch the batch, merge into the latest store,
     * publish `b<batchId>`. Replay-idempotent. Public so specs and batch
     * backfills drive the exact code the stream runs. */
   def applyBatch(batch: DataFrame, itemCol: Column, grpCol: Column, valCol: Column,
                  baseDir: String, batchId: Long, depth: Int, width: Int): Unit = {
-    val spark = batch.sparkSession
-    if (VersionedStore.isCommitted(spark, baseDir, batchId)) return
-    val cmsBatch = CountMin.sketch(batch, itemCol, depth, width)
-    val quantBatch = QuantileSketch.sketch(batch, grpCol, valCol)
-    // Bounded frames (≤ depth·width / 64·|groups| rows) — materialize once
-    // so the publish writes don't re-run the batch scan + store read.
-    val cms = readLatestCms(spark, baseDir)
-      .map(prev => CountMin.merge(prev, cmsBatch)).getOrElse(cmsBatch)
-      .localCheckpoint(true)
-    val quant = readLatestQuantileSketch(spark, baseDir)
-      .map(prev => QuantileSketch.merge(prev, quantBatch)).getOrElse(quantBatch)
-      .localCheckpoint(true)
-    VersionedStore.publish(spark, baseDir, batchId) { target =>
-      cms.write.parquet(new Path(target, "cms").toString)
-      quant.write.parquet(new Path(target, "quant").toString)
+    VersionedStore.commitBatch(batch.sparkSession, baseDir, batchId) { latest =>
+      val cmsBatch = CountMin.sketch(batch, itemCol, depth, width)
+      val quantBatch = QuantileSketch.sketch(batch, grpCol, valCol)
+      // Bounded frames (≤ depth·width / 64·|groups| rows) — materialize once
+      // so the publish writes don't re-run the batch scan + store read.
+      val cms = latest("cms")
+        .map(prev => CountMin.merge(prev, cmsBatch)).getOrElse(cmsBatch)
+        .localCheckpoint(true)
+      val quant = latest("quant")
+        .map(prev => QuantileSketch.merge(prev, quantBatch)).getOrElse(quantBatch)
+        .localCheckpoint(true)
+      Seq("cms" -> cms, "quant" -> quant)
     }
   }
 

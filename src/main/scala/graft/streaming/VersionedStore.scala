@@ -5,11 +5,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Batch-versioned lake directories with commit markers — the shared
   * mechanics of the "state in the lake, not the state store" streaming
-  * family ([[StreamScd2]] S10, [[StreamDedupAdmit]] S17,
-  * [[StreamSketch]] S19): each micro-batch publishes `b<batchId>` with a
-  * `_GRAFT_COMMIT` marker written AFTER the data, so at-least-once
-  * `foreachBatch` replays detect their committed version and skip
-  * (exactly-once effects), and torn writes are invisible to readers.
+  * family: [[StreamDedupAdmit]] (S17), [[StreamSketch]] (S19),
+  * [[StreamAbTest]] (S20), [[StreamConcurrency]] (S21),
+  * [[StreamBlocklist]] (S22), [[StreamRemittance]] (S23),
+  * [[StreamNetting]] (S24) and [[StreamPrivacyGate]]'s lake tier (S16).
+  * Each micro-batch commits through [[commitBatch]], which publishes
+  * `b<batchId>` with a `_GRAFT_COMMIT` marker written AFTER the data, so
+  * at-least-once `foreachBatch` replays detect their committed version and
+  * skip (exactly-once effects), and torn writes are invisible to readers.
   *
   * LOG COMPACTION (round-17): sub-stores with LOG semantics (released
   * rows, dead letters, allocations, verdicts — appended per batch,
@@ -17,16 +20,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * lifetime — an unbounded small-files walk at production lifetimes.
   * [[compactLogs]] rewrites every committed version EXCEPT the newest
   * into one `c<coveredId>` directory (marker-last, same torn-write
-  * discipline as [[publish]]) and [[readLog]] reads compaction +
+  * discipline as [[commitBatch]]) and [[readLog]] reads compaction +
   * b-versions with id > coveredId, so a crash between the compaction
   * marker and the covered-directory deletes can never double-count —
   * superseded directories are excluded BY ID, not by absence, and the
   * next compaction sweeps the stragglers. The newest b-version is never
-  * covered: state reads ([[committedVersions]].last) and the
-  * at-least-once replay check (`isCommitted` of the one batch Spark can
-  * re-run after a crash — the last one, whose own publish committed
-  * before the streaming checkpoint did) both stay intact across a
-  * compaction at any point. */
+  * covered: state reads ([[readLatest]]) and the at-least-once replay
+  * check (the marker of the one batch Spark can re-run after a crash —
+  * the last one, whose own publish committed before the streaming
+  * checkpoint did) both stay intact across a compaction at any point. */
 object VersionedStore {
 
   val Commit = "_GRAFT_COMMIT"
@@ -49,56 +51,82 @@ object VersionedStore {
   def versionDir(baseDir: String, batchId: Long): Path =
     new Path(new Path(baseDir), f"b$batchId%012d")
 
-  /** True if this batch already committed (a replay — skip the work). */
-  def isCommitted(spark: SparkSession, baseDir: String, batchId: Long): Boolean = {
+  /** A sub-store's directory inside a version; the sub `""` is the version
+    * root, where the single-frame stores write. */
+  private def subPath(version: Path, sub: String): Path =
+    if (sub.isEmpty) version else new Path(version, sub)
+
+  private def readSub(spark: SparkSession, version: Path, sub: String): DataFrame =
+    spark.read.parquet(subPath(version, sub).toString)
+
+  /** The newest committed version's `sub` store; None before the first
+    * commit. State reads the LAST version only (state, not logs). */
+  def readLatest(spark: SparkSession, baseDir: String, sub: String): Option[DataFrame] =
+    committedVersions(spark, baseDir).lastOption.map(readSub(spark, _, sub))
+
+  /** Commit one micro-batch as version `b<batchId>` — the one commit path
+    * of the operators above:
+    *   - a batch whose marker exists is a replay: nothing runs;
+    *   - otherwise the directory is listed once, and `build` gets a reader
+    *     for the newest committed version's sub-stores (None before the
+    *     first commit) and returns the batch's (sub, frame) pairs;
+    *   - [[publish]] writes the frames concurrently, then the marker.
+    * The batch's jobs carry the job description `<store dir> b<batchId>`
+    * (the caller's description is restored after), its writes
+    * `<store dir> b<batchId>/<sub>`, so a job listing names the store and
+    * the batch, AQE stage jobs included. Caller guarantee: the returned
+    * frames must not depend on one another (projections/aggregations of
+    * inputs that exist before the call). Returns the version directory,
+    * committed now or by the earlier run a replay skipped. */
+  def commitBatch(spark: SparkSession, baseDir: String, batchId: Long)
+                 (build: (String => Option[DataFrame]) => Seq[(String, DataFrame)]): Path = {
     val target = versionDir(baseDir, batchId)
-    fs(spark, target).exists(new Path(target, Commit))
+    if (fs(spark, target).exists(new Path(target, Commit))) return target
+    val latest = committedVersions(spark, baseDir).lastOption
+    val label = s"${new Path(baseDir).getName} b$batchId"
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(label)
+    try publish(spark, target, label, build(sub => latest.map(readSub(spark, _, sub))))
+    finally sc.setJobDescription(prev)
+    target
   }
 
-  /** Run `write(target)` then drop the commit marker. Deletes any torn
-    * earlier attempt first. */
-  def publish(spark: SparkSession, baseDir: String, batchId: Long)
-             (write: Path => Unit): Unit = {
-    val target = versionDir(baseDir, batchId)
+  /** Write a version's INDEPENDENT sub-store frames CONCURRENTLY, then
+    * drop the commit marker. Run back to back, each write is its own
+    * Spark job paying a full plan + schedule + fs-commit round trip while
+    * the cluster sits idle between them; submitted from a small thread
+    * pool, the next write's planning and scheduling back-fill the
+    * previous one's tail (round-19 job audit: q168 8.40 → 5.89 s warm
+    * against the sequential form).
+    *
+    * Failure: the writes run under one job group. The first failed write
+    * cancels the group; every write is then waited for, the torn
+    * directory is deleted, and the first error is rethrown — so no file
+    * of a failed publish lands after this method returns, and the marker
+    * never exists. A torn earlier attempt is deleted before the writes. */
+  private def publish(spark: SparkSession, target: Path, label: String,
+                      subs: Seq[(String, DataFrame)]): Unit = {
     val f = fs(spark, target)
     if (f.exists(target)) f.delete(target, true)
-    write(target)
-    f.create(new Path(target, Commit), true).close()
-  }
-
-  /** [[publish]] for a version made of several INDEPENDENT sub-store
-    * frames, with the writes submitted CONCURRENTLY (guide §2.6 —
-    * overlap independent jobs). Run back to back, each sub-store write
-    * is its own Spark job paying a full plan + schedule + fs-commit
-    * round trip while the cluster sits idle between them; submitted from
-    * a small thread pool, the next write's driver work back-fills the
-    * previous one's tail (round-19 job audit: the multi-sub drives spent
-    * ~45% of warm wall in inter-job driver gaps at ~55 ms/job). The
-    * torn-write discipline is unchanged: the commit marker lands only
-    * after EVERY write returned — a failed write propagates before the
-    * marker exists, and the on-disk layout is byte-identical to the
-    * sequential form, so readers, replay and compaction see no
-    * difference. Caller guarantee: the frames must not depend on one
-    * another (all are projections/aggregations of inputs that exist
-    * before the call — the applyBatch shape). */
-  def publishSubs(spark: SparkSession, baseDir: String, batchId: Long,
-                  subs: Seq[(String, DataFrame)]): Unit = {
-    val target = versionDir(baseDir, batchId)
-    val f = fs(spark, target)
-    if (f.exists(target)) f.delete(target, true)
+    val sc = spark.sparkContext
+    val group = s"graft-publish-${java.util.UUID.randomUUID()}"
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
     val pool = java.util.concurrent.Executors.newFixedThreadPool(math.max(1, math.min(subs.size, 8)))
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    try {
-      val writes = subs.map { case (sub, df) =>
-        scala.concurrent.Future {
-          df.write.parquet(new Path(target, sub).toString)
+    val writes = try subs.map { case (sub, df) =>
+      scala.concurrent.Future {
+        if (failure.get == null) try {
+          sc.setJobGroup(group, s"$label/$sub", interruptOnCancel = true)
+          df.write.parquet(subPath(target, sub).toString)
+        } catch {
+          case e: Throwable => if (failure.compareAndSet(null, e)) sc.cancelJobGroup(group)
         }
       }
-      // Await each: the first failure throws out of publishSubs with the
-      // marker unwritten, so the torn version is invisible to readers.
-      writes.foreach(scala.concurrent.Await.result(_, scala.concurrent.duration.Duration.Inf))
     } finally pool.shutdown()
+    writes.foreach(scala.concurrent.Await.ready(_, scala.concurrent.duration.Duration.Inf))
+    Option(failure.get).foreach { e => f.delete(target, true); throw e }
     f.create(new Path(target, Commit), true).close()
   }
 

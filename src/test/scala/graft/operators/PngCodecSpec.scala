@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** Exact-pixel tests for the JDK-only PNG codec: hand-crafted PNGs (filtered
   * scanlines deflated with java.util.zip.Deflater — an independent encoder

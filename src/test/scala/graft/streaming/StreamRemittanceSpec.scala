@@ -58,15 +58,12 @@ class StreamRemittanceSpec extends SparkSpec {
   }
 
   test("resuming a store written before the received_cents rename migrates on read") {
-    import org.apache.hadoop.fs.Path
     val base = tmp()
     // simulate a pre-rename committed batch: totals column named paid_cents
     // (debtor 1 already has 15.00 applied), empty allocation log
-    VersionedStore.publish(ss, base, 0L) { target =>
-      Seq((1L, 1500L)).toDF("key", "paid_cents")
-        .write.parquet(new Path(target, "totals").toString)
-      Seq.empty[(Long, Long, Long, Long)].toDF("key", "inv_id", "pay_id", "alloc_cents")
-        .write.parquet(new Path(target, "alloc").toString)
+    VersionedStore.commitBatch(ss, base, 0L) { _ =>
+      Seq("totals" -> Seq((1L, 1500L)).toDF("key", "paid_cents"),
+        "alloc" -> Seq.empty[(Long, Long, Long, Long)].toDF("key", "inv_id", "pay_id", "alloc_cents"))
     }
     val totals0 = StreamRemittance.readLatestTotals(ss, base).get
     assert(totals0.columns.toSeq == Seq("key", "received_cents"),
@@ -109,14 +106,11 @@ class StreamRemittanceSpec extends SparkSpec {
   }
 
   test("readRejects skips versions committed before the dead-letter existed") {
-    import org.apache.hadoop.fs.Path
     val base = tmp()
-    VersionedStore.publish(ss, base, 0L) { target =>
-      Seq((1L, 1500L)).toDF("key", "received_cents")
-        .write.parquet(new Path(target, "totals").toString)
-      Seq.empty[(Long, Long, Long, Long)].toDF("key", "inv_id", "pay_id", "alloc_cents")
-        .write.parquet(new Path(target, "alloc").toString)
-      // no rejects dir — a pre-dead-letter version
+    // no rejects dir — a pre-dead-letter version
+    VersionedStore.commitBatch(ss, base, 0L) { _ =>
+      Seq("totals" -> Seq((1L, 1500L)).toDF("key", "received_cents"),
+        "alloc" -> Seq.empty[(Long, Long, Long, Long)].toDF("key", "inv_id", "pay_id", "alloc_cents"))
     }
     assert(StreamRemittance.readRejects(ss, base).isEmpty,
       "old store: no rejects anywhere → None, not a missing-path crash")

@@ -4,7 +4,7 @@ import java.nio.file.Files
 import java.sql.Timestamp
 import scala.collection.mutable
 import graft.SparkSpec
-import graft.operators.{CountMin, Expectations, QuantileSketch}
+import graft.operators.Expectations
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
