@@ -49,14 +49,11 @@ object Prof {
   private def report(tag: String, rows: Long, w: MetricsListener.Window): Unit = {
     println(f"== $tag wall=${w.wallMs / 1e3}%.3fs rows=$rows jobs=${w.jobs.size} " +
       f"busy=${w.busyMs / 1e3}%.3fs gap=${w.gapMs / 1e3}%.3fs")
-    // Gap before each job, measured from the latest job end seen so far and
-    // seeded at the window start, so the first job's planning time shows.
-    var prevEnd = w.fromMs
-    w.jobs.sortBy(_.startMs).foreach { j =>
-      val gap = (j.startMs - prevEnd) / 1e3
+    // Idle time before each job, from the window start, so the first job's
+    // planning time shows; a job overlapping an earlier one shows 0.
+    w.jobGaps.foreach { case (j, gapMs) =>
       val dur = if (j.endMs < 0) "  no end" else f"${(j.endMs - j.startMs) / 1e3}%7.3fs"
-      println(f"   job ${j.id}%5d $dur gap=$gap%7.3fs ${j.desc.take(80)}")
-      prevEnd = math.max(prevEnd, j.endMs)
+      println(f"   job ${j.id}%5d $dur gap=${gapMs / 1e3}%7.3fs ${j.desc.take(80)}")
     }
     w.stages.take(10).foreach { s =>
       println(f"   stage ${s.stage}%5d tasks=${s.tasks}%4d sum=${s.sumMs / 1e3}%7.2fs " +

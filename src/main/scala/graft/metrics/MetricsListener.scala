@@ -100,6 +100,15 @@ object MetricsListener {
     total
   }
 
+  /** Run `body` with `label` as the job description of this thread's jobs
+    * (AQE stage jobs and the listener's job log inherit it), restoring the
+    * caller's description after. */
+  def withJobDescription[T](sc: SparkContext, label: String)(body: => T): T = {
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(label)
+    try body finally sc.setJobDescription(prev)
+  }
+
   final case class Window(fromMs: Long, untilMs: Long, jobs: Seq[Job], tasks: Seq[Task],
                           stageNames: Map[Int, String]) {
     def wallMs: Long = untilMs - fromMs
@@ -107,6 +116,20 @@ object MetricsListener {
     /** Wall time with no job in flight: planning, driver loops, file-system
       * round trips. Never negative. */
     def gapMs: Long = wallMs - busyMs
+    /** Each job with the idle time just before it: the part of the span
+      * from the window start and the jobs before it to its start in which
+      * no job ran. Measured against the busy-interval union, as [[busyMs]]
+      * is, so a job that starts while another still runs has a gap of 0,
+      * never a negative one. A job with no end seen yet extends no
+      * interval. */
+    def jobGaps: Seq[(Job, Long)] = {
+      var covered = fromMs
+      jobs.sortBy(_.startMs).map { j =>
+        val gap = math.max(0L, j.startMs - covered)
+        covered = math.max(covered, j.endMs)
+        j -> gap
+      }
+    }
     def shuffleReadBytes: Long = tasks.map(_.shReadBytes).sum
     def shuffleWriteBytes: Long = tasks.map(_.shWriteBytes).sum
     def spillBytes: Long = tasks.map(_.spillBytes).sum

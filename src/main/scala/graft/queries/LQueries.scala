@@ -117,14 +117,19 @@ object LQueries {
   def q183(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
     var store = graft.operators.IncrementalDedup.emptyStore(s, k = 3, numHashes = 8)
-    (0 until 3).map { b =>
-      val adm = graft.operators.IncrementalDedup.admit(
-        docs.where(pmod(col("doc_id"), lit(3)) === b),
-        col("doc_id"), col("text"), store,
-        k = 3, numHashes = 8, rowsPerBand = 2, minAgree = 4)
+    def described[T](label: String)(body: => T): T =
+      graft.metrics.MetricsListener.withJobDescription(s.sparkContext, s"q183 $label")(body)
+    val admitted = (0 until 3).map { b =>
+      val adm = described(s"b$b") {
+        graft.operators.IncrementalDedup.admit(
+          docs.where(pmod(col("doc_id"), lit(3)) === b),
+          col("doc_id"), col("text"), store,
+          k = 3, numHashes = 8, rowsPerBand = 2, minAgree = 4)
+      }
       store = adm.store
       adm.admitted.select(col("doc_id"), lit(b.toLong).as("batch"))
-    }.reduce(_.unionByName(_)).localCheckpoint(true)
+    }
+    described("admitted")(admitted.reduce(_.unionByName(_)).localCheckpoint(true))
   }
 
   /** L72: per-source dataset card — volume, vocabulary health, exact-dup

@@ -1,10 +1,10 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import graft.pipeline.StageReport
 
 /** Streaming refund netting (SURVEY §2b S24) — the watermark-horizon form
   * of [[graft.operators.Remittance.netAdjustments]]: postings are held in
@@ -52,8 +52,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * Scale shape per batch: one per-key sort window over (pending ∪ batch)
   * — horizon-bounded, the same class as the batch operator's two
   * in-partition sorts — one release aggregation, one axis merge. The only
-  * driver-side value is the global max event time (one row, metadata).
-  * Delivery is effective-once via [[VersionedStore]] commit markers.
+  * driver-side value is the global max event time: the stored one (one
+  * row, metadata) folded with the batch's, which an [[Observation]] takes
+  * on the netting checkpoint the batch runs anyway. Delivery is
+  * effective-once via [[VersionedStore]] commit markers.
   */
 object StreamNetting {
 
@@ -78,9 +80,11 @@ object StreamNetting {
     VersionedStore.readLog(spark, baseDir, "deadletter")
 
   /** One micro-batch: buffer, net, release, dead-letter, publish.
-    * Returns THIS batch's released rows (read back from the committed
-    * version, so a foreachBatch replay returns the already-committed
-    * delta instead of recomputing against advanced state).
+    * Returns THIS batch's released rows as a lazy read of the committed
+    * version's `released` sub-store, through the schema its marker records,
+    * so the return starts no Spark job; a foreachBatch replay returns the
+    * already-committed delta the same way instead of recomputing against
+    * advanced state.
     *
     * @param horizonSec watermark horizon in seconds: a row releases once
     *   max-seen event time exceeds its event time by AT LEAST this
@@ -91,7 +95,7 @@ object StreamNetting {
     val spark = batch.sparkSession
     val version = VersionedStore.commitBatch(spark, baseDir, batchId)(
       nettedSubs(batch, keyCol, idCol, tsCol, amountCol, horizonSec, _))
-    spark.read.parquet(new Path(version, "released").toString)
+    VersionedStore.readVersion(spark, version, "released")
   }
 
   /** The version [[applyBatch]] commits — (sub, frame) per sub-store —
@@ -122,28 +126,9 @@ object StreamNetting {
         .withColumn("dref_id", lit(null).cast(rows.schema("id").dataType))
         .withColumn("dref_ts", lit(null).cast(rows.schema("ts").dataType))
 
-    // Global max event time (epoch millis) = the watermark clock (one-row
-    // metadata collect; mirrors Spark's global watermark semantics). The
-    // stored previous max and this batch's max fold in ONE collect — as
-    // separate collects they were two driver round-trip jobs per
-    // micro-batch (round-19 job audit); max over the union is the same
-    // number (unix_millis == Timestamp.getTime, and an all-null batch
-    // falls back to the stored value exactly as before).
-    val prevMaxDf = latest("meta")
-      .getOrElse(spark.range(0).select(col("id").as("max_ts_ms")))
-    val batchMax = rows.agg(max(unix_millis(col("ts"))).as("max_ts_ms"))
-      .unionByName(prevMaxDf.select(col("max_ts_ms")))
-      .agg(max(col("max_ts_ms"))).collect().head match {
-      case r if r.isNullAt(0) => None
-      case r => Some(r.getLong(0))
-    }
-    val wm = batchMax.map(ms => new java.sql.Timestamp(ms - horizonSec * 1000L))
-    // Deficit-expiry clock: a refund's claw may be absorbed by postings
-    // with event time up to refund.ts + horizon (the ones that can still
-    // arrive non-late); once the watermark passes THAT point — i.e.
-    // dref_ts < maxTs − 2·horizon — no absorber can arrive on time and
-    // the remainder is written off.
-    val wm2 = batchMax.map(ms => new java.sql.Timestamp(ms - 2 * horizonSec * 1000L))
+    // Stored global max event time (epoch millis), from the 1-row meta sub.
+    val prevMax = latest("meta")
+      .flatMap(_.select(col("max_ts_ms")).collect().headOption).map(_.getLong(0))
 
     // Suffix-min envelope over (axis carry + rows), floored at f_net:
     // released cash is the one thing a pending claw can never touch.
@@ -159,7 +144,8 @@ object StreamNetting {
     val wRev = Window.partitionBy("key")
       .orderBy(col("ts").desc_nulls_first, col("id").desc_nulls_first)
     val wAll = Window.partitionBy("key")
-    val netted = rows
+    val tsObs = Observation()
+    val netted0 = rows
       .join(axis, Seq("key"), "left")
       .na.fill(0L, Seq("c_raw", "f_net"))
       .withColumn("__cum", col("c_raw") + sum(col("c")).over(wAsc))
@@ -169,8 +155,28 @@ object StreamNetting {
       .withColumn("__prev", coalesce(lead(col("__env"), 1).over(wRev),
         greatest(col("f_net"), least(col("c_raw"), min(col("__cum")).over(wAll)))))
       .withColumn("net_cents", col("__env") - col("__prev"))
-      .withColumn("__rel", wm.map(col("ts") <= lit(_)).getOrElse(lit(false)))
+      .observe(tsObs, max(unix_millis(col("ts"))).as("max_ts_ms"))
       .localCheckpoint(true)
+
+    // Global max event time = the watermark clock (mirrors Spark's global
+    // watermark semantics): the stored max folded with this batch's, which
+    // the Observation above takes during the netting checkpoint. `netted0`
+    // holds exactly the rows of `rows` (the axis has one row per key), so
+    // this is the max over the buffer and the batch without a separate
+    // aggregate + collect over rows the checkpoint scans anyway (unix_millis
+    // == Timestamp.getTime). An empty or all-null-ts batch observes null and
+    // keeps the stored max.
+    val observed = StageReport.awaitObserved(tsObs, "the netting checkpoint's max event time")
+    val batchMax = (prevMax ++ Option.unless(observed.isNullAt(0))(observed.getLong(0))).maxOption
+    val wm = batchMax.map(ms => new java.sql.Timestamp(ms - horizonSec * 1000L))
+    // Deficit-expiry clock: a refund's claw may be absorbed by postings
+    // with event time up to refund.ts + horizon (the ones that can still
+    // arrive non-late); once the watermark passes THAT point — i.e.
+    // dref_ts < maxTs − 2·horizon — no absorber can arrive on time and
+    // the remainder is written off.
+    val wm2 = batchMax.map(ms => new java.sql.Timestamp(ms - 2 * horizonSec * 1000L))
+    val netted = netted0
+      .withColumn("__rel", wm.map(col("ts") <= lit(_)).getOrElse(lit(false)))
 
     val released = netted.where(col("__rel"))
       .select(col("key"), col("id"), col("ts"), col("net_cents"),

@@ -1,7 +1,10 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
+import java.nio.charset.StandardCharsets.UTF_8
+import graft.metrics.MetricsListener
 
 /** Batch-versioned lake directories with commit markers — the shared
   * mechanics of the "state in the lake, not the state store" streaming
@@ -13,6 +16,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `b<batchId>` with a `_GRAFT_COMMIT` marker written AFTER the data, so
   * at-least-once `foreachBatch` replays detect their committed version and
   * skip (exactly-once effects), and torn writes are invisible to readers.
+  *
+  * MARKER FORMAT: the `_GRAFT_COMMIT` marker of a `b<id>` or `c<id>`
+  * directory holds one line per sub-store written into it,
+  * `<sub>\t<schema>`, the schema as Spark `DataType` JSON with every field
+  * nullable (as Spark's file source reads Parquet back). Reads of sub-store
+  * directories whose markers all record one and the same schema pass it
+  * to the reader, so they start no Parquet schema-inference job. A marker
+  * that records no schema for the sub (an empty marker, written before
+  * schemas were recorded) or markers that disagree (a log whose schema
+  * evolved, the rejects-added-later precedent) fall back to footer
+  * inference, merging footers across directories.
   *
   * LOG COMPACTION (round-17): sub-stores with LOG semantics (released
   * rows, dead letters, allocations, verdicts — appended per batch,
@@ -56,13 +70,59 @@ object VersionedStore {
   private def subPath(version: Path, sub: String): Path =
     if (sub.isEmpty) version else new Path(version, sub)
 
-  private def readSub(spark: SparkSession, version: Path, sub: String): DataFrame =
-    spark.read.parquet(subPath(version, sub).toString)
+  /** Write a version's marker, recording each written sub's schema as
+    * readers will see it (see the header). */
+  private def writeMarker(f: FileSystem, version: Path, schemas: Seq[(String, StructType)]): Unit = {
+    val out = f.create(new Path(version, Commit), true)
+    try out.write(schemas.map { case (sub, t) => s"$sub\t${nullable(t).json}\n" }.mkString.getBytes(UTF_8))
+    finally out.close()
+  }
+
+  /** Spark's file source reads every field back nullable; record that
+    * schema, or a rewritten (compacted) sub and a freshly written one would
+    * differ only in nullability. */
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+    case other => other
+  }
+
+  /** The schemas a version's marker records, by sub; empty for a marker
+    * written before schemas were recorded. */
+  private def recordedSchemas(f: FileSystem, version: Path): Map[String, StructType] = {
+    val in = f.open(new Path(version, Commit))
+    val text = try new String(in.readAllBytes(), UTF_8) finally in.close()
+    text.linesIterator.filter(_.contains('\t')).map { line =>
+      val (sub, json) = line.splitAt(line.indexOf('\t'))
+      sub -> DataType.fromJson(json.tail).asInstanceOf[StructType]
+    }.toMap
+  }
+
+  /** The `sub` store of one or more committed versions (b or c
+    * directories), unioned. With the schema their markers record when all
+    * of them record the same one: no footer is read, so no Spark job
+    * starts. Otherwise Parquet infers the schema, merging footers when
+    * there are several directories. */
+  private def readSubs(spark: SparkSession, versions: Seq[Path], sub: String): DataFrame = {
+    val dirs = versions.map(subPath(_, sub).toString)
+    val f = fs(spark, versions.head)
+    versions.map(recordedSchemas(f, _).get(sub)).distinct match {
+      case Seq(Some(schema)) => spark.read.schema(schema).parquet(dirs: _*)
+      case _ if dirs.size > 1 => spark.read.option("mergeSchema", "true").parquet(dirs: _*)
+      case _ => spark.read.parquet(dirs: _*)
+    }
+  }
+
+  /** One committed version's `sub` store, e.g. the version
+    * [[commitBatch]] returns. */
+  def readVersion(spark: SparkSession, version: Path, sub: String): DataFrame =
+    readSubs(spark, Seq(version), sub)
 
   /** The newest committed version's `sub` store; None before the first
     * commit. State reads the LAST version only (state, not logs). */
   def readLatest(spark: SparkSession, baseDir: String, sub: String): Option[DataFrame] =
-    committedVersions(spark, baseDir).lastOption.map(readSub(spark, _, sub))
+    committedVersions(spark, baseDir).lastOption.map(readVersion(spark, _, sub))
 
   /** Commit one micro-batch as version `b<batchId>` — the one commit path
     * of the operators above:
@@ -84,11 +144,9 @@ object VersionedStore {
     if (fs(spark, target).exists(new Path(target, Commit))) return target
     val latest = committedVersions(spark, baseDir).lastOption
     val label = s"${new Path(baseDir).getName} b$batchId"
-    val sc = spark.sparkContext
-    val prev = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(label)
-    try publish(spark, target, label, build(sub => latest.map(readSub(spark, _, sub))))
-    finally sc.setJobDescription(prev)
+    MetricsListener.withJobDescription(spark.sparkContext, label) {
+      publish(spark, target, label, build(sub => latest.map(readVersion(spark, _, sub))))
+    }
     target
   }
 
@@ -104,7 +162,8 @@ object VersionedStore {
     * cancels the group; every write is then waited for, the torn
     * directory is deleted, and the first error is rethrown — so no file
     * of a failed publish lands after this method returns, and the marker
-    * never exists. A torn earlier attempt is deleted before the writes. */
+    * never exists. A torn earlier attempt is deleted before the writes.
+    * The marker records each sub's schema (see the header). */
   private def publish(spark: SparkSession, target: Path, label: String,
                       subs: Seq[(String, DataFrame)]): Unit = {
     val f = fs(spark, target)
@@ -127,7 +186,7 @@ object VersionedStore {
     } finally pool.shutdown()
     writes.foreach(scala.concurrent.Await.ready(_, scala.concurrent.duration.Duration.Inf))
     Option(failure.get).foreach { e => f.delete(target, true); throw e }
-    f.create(new Path(target, Commit), true).close()
+    writeMarker(f, target, subs.map { case (sub, df) => sub -> df.schema })
   }
 
   /** Numeric id of a `b…`/`c…` version directory. */
@@ -144,33 +203,32 @@ object VersionedStore {
       .map(_.getPath).sortBy(_.getName).lastOption
   }
 
-  /** The directories a LOG sub-store reads: the compaction's sub (when
-    * present) plus b-versions with id > coveredId. Superseded b-versions
-    * are excluded by ID even when a crashed compaction left them on disk
-    * — re-reading them would double-count rows the compaction already
-    * absorbed. */
-  def logDirs(spark: SparkSession, baseDir: String, sub: String): Seq[String] = {
+  /** The versions a LOG sub-store reads: the compaction (when it holds
+    * the sub) plus b-versions with id > coveredId that hold it.
+    * Superseded b-versions are excluded by ID even when a crashed
+    * compaction left them on disk — re-reading them would double-count
+    * rows the compaction already absorbed. */
+  private def logVersions(spark: SparkSession, baseDir: String, sub: String): Seq[Path] = {
     val comp = latestCompaction(spark, baseDir)
     val covered = comp.map(versionId).getOrElse(-1L)
     val f = fs(spark, new Path(baseDir))
-    val compSub = comp.map(new Path(_, sub)).filter(f.exists)
-    val live = committedVersions(spark, baseDir)
-      .filter(versionId(_) > covered)
-      .map(new Path(_, sub)).filter(f.exists)
-    (compSub.toSeq ++ live).map(_.toString)
+    (comp.toSeq ++ committedVersions(spark, baseDir).filter(versionId(_) > covered))
+      .filter(v => f.exists(new Path(v, sub)))
   }
 
+  /** The directories a LOG sub-store reads (see [[logVersions]]). */
+  def logDirs(spark: SparkSession, baseDir: String, sub: String): Seq[String] =
+    logVersions(spark, baseDir, sub).map(new Path(_, sub).toString)
+
   /** Union of a LOG sub-store across the compaction and live versions;
-    * None when nothing has committed rows for it yet. mergeSchema because
-    * a log's schema may evolve across versions (the rejects-added-later
-    * precedent): a single footer's schema would silently drop columns
-    * only newer versions carry. Log directories are small (one file set
-    * per micro-batch, bounded by compaction), so the extra footer reads
-    * are noise. */
+    * None when nothing has committed rows for it yet. A log's schema may
+    * evolve across versions (the rejects-added-later precedent): when the
+    * markers disagree, the read merges footer schemas, since a single
+    * footer's schema would silently drop columns only newer versions
+    * carry. */
   def readLog(spark: SparkSession, baseDir: String, sub: String): Option[DataFrame] = {
-    val dirs = logDirs(spark, baseDir, sub)
-    if (dirs.isEmpty) None
-    else Some(spark.read.option("mergeSchema", "true").parquet(dirs: _*))
+    val versions = logVersions(spark, baseDir, sub)
+    if (versions.isEmpty) None else Some(readSubs(spark, versions, sub))
   }
 
   /** Rewrite every committed version EXCEPT the newest into one
@@ -216,18 +274,19 @@ object VersionedStore {
     val covered = versions.init.filter(versionId(_) > prevCovered)
     val target = new Path(new Path(baseDir), f"c$coveredId%012d")
     if (f.exists(target)) f.delete(target, true) // torn earlier attempt
-    logSubs.foreach { sub =>
-      val srcs = (prev.map(new Path(_, sub)).toSeq ++ covered.map(new Path(_, sub)))
-        .filter(f.exists).map(_.toString)
-      // mergeSchema: the rewrite is PERMANENT (sources are later swept) —
-      // taking one file's footer schema would silently drop columns only
-      // newer versions carry (round-17 advice; the rejects-added-later
-      // schema-evolution precedent).
-      if (srcs.nonEmpty)
-        spark.read.option("mergeSchema", "true").parquet(srcs: _*)
-          .write.parquet(new Path(target, sub).toString)
+    val written = logSubs.flatMap { sub =>
+      val srcs = (prev.toSeq ++ covered).filter(v => f.exists(new Path(v, sub)))
+      // Sources whose markers disagree merge their footer schemas: the
+      // rewrite is PERMANENT (sources are later swept) — taking one file's
+      // footer schema would silently drop columns only newer versions
+      // carry (round-17 advice; the rejects-added-later precedent).
+      srcs.headOption.map { _ =>
+        val df = readSubs(spark, srcs, sub)
+        df.write.parquet(new Path(target, sub).toString)
+        sub -> df.schema
+      }
     }
-    f.create(new Path(target, Commit), true).close()
+    writeMarker(f, target, written)
     // Grace sweep: only what the PREVIOUS pass superseded (see scaladoc).
     sweep(prevCovered)
     true

@@ -26,6 +26,13 @@ class MetricsListenerSpec extends SparkSpec {
     assert(w.gapMs == 800L)
   }
 
+  test("a job that starts while another runs has a gap of 0, never a negative one") {
+    val w = window(0L, 1000L, Job(1, "a", 100L, 600L), Job(2, "b", 300L, 900L), Job(3, "c", 950L, 980L))
+    assert(w.jobGaps.map { case (j, gap) => j.id -> gap } == Seq(1 -> 100L, 2 -> 0L, 3 -> 50L))
+    // the gaps before the jobs plus the idle tail are the window's gap
+    assert(w.jobGaps.map(_._2).sum + (w.untilMs - 980L) == w.gapMs)
+  }
+
   test("touching intervals add up, nested ones count once, and jobs clip to the window") {
     assert(MetricsListener.busyMs(Seq(Job(1, "", 0L, 100L), Job(2, "", 100L, 250L)), 0L, 1000L) == 250L)
     assert(MetricsListener.busyMs(Seq(Job(1, "", 0L, 500L), Job(2, "", 100L, 200L)), 0L, 1000L) == 500L)

@@ -254,6 +254,24 @@ class StreamNettingSpec extends SparkSpec {
       == Seq((2L, 2000L)))
   }
 
+  test("a batch of only null-ts rows, or of none, after a stored max keeps that watermark") {
+    val base = tmp()
+    apply1(base, Seq((1L, 1L, "2024-01-01 00:00:00", 10.00),
+      (1L, 2L, "2024-01-10 00:00:00", 5.00)), DAY, 0L)
+    def storedMax = VersionedStore.readLatest(ss, base, "meta").get.as[Long].collect().toSeq
+    val max0 = storedMax
+    assert(max0 == Seq(java.sql.Timestamp.valueOf("2024-01-10 00:00:00").getTime))
+    val nullTs = Seq((1L, 3L, null.asInstanceOf[String], 7.00))
+    assert(apply1(base, nullTs, DAY, 1L).count() == 0)
+    assert(storedMax == max0, "an all-null-ts batch keeps the stored max")
+    assert(apply1(base, Nil, DAY, 2L).count() == 0)
+    assert(storedMax == max0, "an empty batch keeps the stored max")
+    // 01-05 is behind the kept watermark (01-09): it releases on arrival
+    val rel = apply1(base, Seq((1L, 4L, "2024-01-05 00:00:00", 1.00)), DAY, 3L)
+    assert(rel.select("id", "net_cents").as[(Long, Long)].collect().toSeq == Seq((4L, 100L)))
+    assert(storedMax == max0)
+  }
+
   test("null-ts row in the same batch as a releasing refund is inert (prefix property)") {
     // Round-17 advice: the __grew telescope (rel_raw < 0) needs released
     // rows to form a contiguous prefix of the wAsc order. Under Spark's
