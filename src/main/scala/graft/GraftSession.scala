@@ -40,8 +40,6 @@ object GraftSession {
       // session reads.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
-      // local files set their permissions without a chmod process each
-      .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
 
   /** Local session sized like the driver's harness. The graft function
     * set (graft_md5_fold48, graft_jaro_winkler, …) registers here so
