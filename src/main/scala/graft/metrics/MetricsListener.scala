@@ -109,6 +109,14 @@ object MetricsListener {
     try body finally sc.setJobDescription(prev)
   }
 
+  /** [[withJobDescription]] with `label` appended to the caller's
+    * description (`<caller>/<label>`, or `label` alone when the caller set
+    * none), so an operator's jobs inside a stream batch still name the
+    * batch: `dedup b1/DupClusters`. */
+  def withJobScope[T](sc: SparkContext, label: String)(body: => T): T =
+    withJobDescription(sc,
+      Option(sc.getLocalProperty("spark.job.description")).fold(label)(d => s"$d/$label"))(body)
+
   final case class Window(fromMs: Long, untilMs: Long, jobs: Seq[Job], tasks: Seq[Task],
                           stageNames: Map[Int, String]) {
     def wallMs: Long = untilMs - fromMs

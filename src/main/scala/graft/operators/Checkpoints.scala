@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.broadcast
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, LogicalPlan, Project, Union}
 import org.apache.spark.sql.execution.LogicalRDD
 
@@ -14,16 +15,22 @@ import org.apache.spark.sql.execution.LogicalRDD
   * per round re-derives in under a second (round-14 profiling). */
 object Checkpoints {
 
-  /** Row guard for the iterative operators' EXPLICIT broadcast hints
-    * ([[Graph.seedDistances]], [[DupClusters]]): a hint bypasses
-    * autoBroadcastJoinThreshold, so a node table that grew past what a
-    * driver can collect would abort the job at Spark's broadcast hard
-    * caps (8 GB / 512M rows). 20M rows of (long, long) ≈ a ~320MB hashed
-    * relation — comfortably inside the caps with headroom for executor
-    * copies; past it the round degrades to a planner-chosen shuffle
-    * join instead of a cliff. The counts that feed the guard are reads
-    * of frames the loops already materialize eagerly per round. */
+  /** [[broadcastWithin]]'s limit for node-sized sides (labels, BFS
+    * frontier, degree and adjacency tables, peel drops): 20M rows of
+    * (long, long) ≈ a ~320MB hashed relation, well inside Spark's
+    * broadcast hard caps (8 GB / 512M rows). */
   val BroadcastRowLimit = 20000000L
+
+  /** [[broadcastWithin]]'s limit for an LSH candidate-pair set ([[NearDup]]). */
+  val CandidateBroadcastRowLimit = 5000000L
+
+  /** `broadcast(df)` when `rows`, a count of `df` the operator already
+    * took (never a new job), is within `limit`; else `df` unhinted. A hint
+    * bypasses autoBroadcastJoinThreshold, so past the limit the join
+    * degrades to a planner-chosen shuffle join instead of aborting at the
+    * hard caps. */
+  def broadcastWithin(df: DataFrame, rows: Long, limit: Long = BroadcastRowLimit): DataFrame =
+    if (rows <= limit) broadcast(df) else df
 
   /** AQE's byte-based partition coalescing cannot see CPU-dense shuffles:
     * an iterative op's dedup/min-agg over edge-scale input map-side-

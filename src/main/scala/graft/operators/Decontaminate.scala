@@ -24,24 +24,20 @@ object Decontaminate {
 
   /** Per-train-doc contamination stats: (id, n_grams, n_hit, contam_frac_q).
     * Docs with fewer than n tokens have no n-grams and score 0 (clean).
-    *
-    * @param hintBroadcast broadcast the benchmark gram set (default; right
-    *   whenever the benchmark is benchmark-sized). Pass false for a huge
-    *   "benchmark" (e.g. decontaminating against another corpus) — the join
-    *   falls back to shuffle, and AQE may still upgrade it at runtime. */
+    * The benchmark gram set is always broadcast: `bench` must be
+    * benchmark-sized, not another corpus (counting it to gate the hint
+    * would cost a job). */
   def contaminationStats(docs: DataFrame, id: Column, text: Column,
-                         bench: DataFrame, benchText: Column, n: Int,
-                         hintBroadcast: Boolean = true): DataFrame = {
+                         bench: DataFrame, benchText: Column, n: Int): DataFrame = {
     require(n >= 1, s"n must be positive, got $n")
     // tokens are projected to a bound column before the n-gram transform —
     // see the wordNgrams scaladoc (inlining the tokenizer into the lambda
     // re-tokenizes the doc per gram, O(len²))
-    val benchGrams = bench
+    val benchSide = broadcast(bench
       .select(Repetition.wordTokens(benchText).as("__toks"))
       .select(explode(array_distinct(Repetition.wordNgrams(col("__toks"), n))).as("gram"))
       .distinct()
-      .withColumn("__hit", lit(1))
-    val benchSide = if (hintBroadcast) broadcast(benchGrams) else benchGrams
+      .withColumn("__hit", lit(1)))
     val docGrams = docs
       .select(id.as("id"), Repetition.wordTokens(text).as("__toks"))
       .select(col("id"),
@@ -60,11 +56,11 @@ object Decontaminate {
     * (a fraction in [0,1]) — the shippable decontaminated corpus. */
   def decontaminate(docs: DataFrame, id: Column, text: Column,
                     bench: DataFrame, benchText: Column, n: Int,
-                    threshold: Double, hintBroadcast: Boolean = true): DataFrame = {
+                    threshold: Double): DataFrame = {
     val thresholdQ = math.floor(threshold * 10000.0).toLong
     // distinct keep-column name: the caller's id column may itself be "id",
     // which would make the semi-join condition ambiguous
-    val clean = contaminationStats(docs, id, text, bench, benchText, n, hintBroadcast)
+    val clean = contaminationStats(docs, id, text, bench, benchText, n)
       .filter(col("contam_frac_q") < thresholdQ)
       .select(col("id").as("__decontam_keep"))
     docs.join(clean, id === col("__decontam_keep"), "left_semi")

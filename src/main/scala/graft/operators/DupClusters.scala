@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
+import graft.metrics.MetricsListener
+import graft.pipeline.StageReport
 
 /** Duplicate clustering: connected components over near-duplicate pairs,
   * assigning every involved document the MINIMUM doc id of its component —
@@ -46,21 +48,18 @@ object DupClusters {
     * side at sf1 (broadcasting the 24M-row symmetrized edge set once per
     * round — the q109 inversion class, round-14 plan audit). Labels are
     * node-sized (≤ the docs participating in ≥1 near-dup pair), the side
-    * a human would broadcast; on corpora where even that is too big, pass
-    * `broadcastLabels = false` for planner-chosen shuffle joins. The hint
-    * is also ROW-GUARDED ([[Checkpoints.BroadcastRowLimit]] — an explicit
-    * hint bypasses autoBroadcastJoinThreshold, and past Spark's broadcast
-    * hard caps it would abort, not degrade); the label count rides the
-    * round's existing observe metric, no extra job. */
-  def connectedComponents(edges: DataFrame, maxIter: Int = 30,
-                          broadcastLabels: Boolean = true): DataFrame =
-    connectedComponentsWithRounds(edges, maxIter, broadcastLabels)._1
+    * a human would broadcast, gated by [[Checkpoints.broadcastWithin]] on
+    * the label count, which rides the round's existing observe metric. */
+  def connectedComponents(edges: DataFrame, maxIter: Int = 30): DataFrame =
+    connectedComponentsWithRounds(edges, maxIter)._1
 
   /** Same, also returning the number of propagation rounds executed —
-    * exposed for round-complexity assertions in tests. */
+    * exposed for round-complexity assertions in tests, and `rowLimit`
+    * for the shuffle-join path. */
   private[graft] def connectedComponentsWithRounds(
       edges: DataFrame, maxIter: Int = 30,
-      broadcastLabels: Boolean = true): (DataFrame, Int) = {
+      rowLimit: Long = Checkpoints.BroadcastRowLimit): (DataFrame, Int) =
+    MetricsListener.withJobScope(edges.sparkSession.sparkContext, "DupClusters") {
     val BIG = Long.MaxValue
     // Materialize the edge input ONCE before symmetrizing: both union
     // branches reference `edges`, and without the cut the upstream pair-
@@ -98,9 +97,8 @@ object DupClusters {
       // (a) one-hop push: neighbors' labels arrive tagged with prev=BIG so
       // min(prev) recovers each node's own previous label for the change
       // count — no second pass over last round's frame.
-      val lbl = if (broadcastLabels && labelRows <= Checkpoints.BroadcastRowLimit)
-        broadcast(labels) else labels
-      val pushed = lbl.join(sym, col("id") === col("src"))
+      val pushed = Checkpoints.broadcastWithin(labels, labelRows, rowLimit)
+        .join(sym, col("id") === col("src"))
         .select(col("dst").as("id"), col("cluster_id"), lit(BIG).as("prev"))
       val self = labels.select(col("id"), col("cluster_id"), col("cluster_id").as("prev"))
       // Eager checkpoint BEFORE the jump self-join: joining a plan that
@@ -116,11 +114,10 @@ object DupClusters {
         .observe(obs1, sum(when(col("lbl") < col("prev"), 1L).otherwise(0L)).as("changed"),
           count(lit(1)).as("n")) // next round's label count, free
         .localCheckpoint(true)
+      val m = StageReport.awaitObserved(obs1, s"DupClusters round $i")
+      labelRows = m.getAs[Long]("n")
       // sum over an empty round is SQL NULL — treat as converged
-      def noChange(o: Observation) =
-        o.get.get("changed").forall(v => v == null || v.asInstanceOf[Long] == 0L)
-      labelRows = obs1.get.get("n").collect { case n: Long => n }.getOrElse(labelRows)
-      if (noChange(obs1)) {
+      if (m.isNullAt(m.fieldIndex("changed")) || m.getAs[Long]("changed") == 0L) {
         // one-hop fixpoint IS full convergence (see Scaladoc) — skip the
         // jump join entirely; this is every run's terminal round, and for
         // diameter-1 corpora (plain duplicate pairs) the only round.

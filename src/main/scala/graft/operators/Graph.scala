@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import graft.metrics.MetricsListener
+import graft.pipeline.StageReport
 
 /** Graph analytics over entity-relation pairs: integer-exact PageRank and
   * degree-ordered triangle counting. Both are standard corpus-curation
@@ -39,7 +41,8 @@ object Graph {
     * single key; real baskets are small, oversized ones are dropped
     * whole (the skew-cap pattern used across the dedup family). */
   def coOccurrenceEdges(df: DataFrame, groupCol: String, itemCol: String,
-                        maxGroupSize: Int = 1000): DataFrame = {
+                        maxGroupSize: Int = 1000): DataFrame =
+    MetricsListener.withJobScope(df.sparkSession.sparkContext, "Graph.coOccurrenceEdges") {
     val pairs = df.select(col(groupCol).as("gk"), col(itemCol).cast("long").as("item")).distinct()
     val sized = pairs.groupBy("gk")
       .agg(collect_list("item").as("items"))
@@ -148,18 +151,17 @@ object Graph {
     * driver as a ~400MB hashed relation once per round (round-14
     * profiling: the query's hot task and its GC-variance source). The
     * frontier is bounded by the seed-reachable set — node-sized, the
-    * side a human would broadcast; on graphs where even that is too big
-    * to broadcast, pass `broadcastFrontier = false` and the planner
-    * falls back to shuffle joins (the [[triangleCounts]] flag pattern).
-    * The hint is also ROW-GUARDED per round: an explicit broadcast
-    * bypasses autoBroadcastJoinThreshold entirely, so a frontier past
-    * [[Checkpoints.BroadcastRowLimit]] would hit Spark's broadcast hard
-    * caps (driver collect, 512M-row relation) as an abort — the guard
-    * degrades that round to a shuffle join instead. The row count is
-    * free: it replaces the emptiness probe the loop already paid, read
-    * from the round's eager checkpoint. */
-  def seedDistances(edges: DataFrame, seeds: DataFrame, maxDepth: Int,
-                    broadcastFrontier: Boolean = true): DataFrame = {
+    * side a human would broadcast, ROW-GUARDED per round by
+    * [[Checkpoints.broadcastWithin]]. The row count is free: it replaces
+    * the emptiness probe the loop already paid, read from the round's
+    * eager checkpoint. */
+  def seedDistances(edges: DataFrame, seeds: DataFrame, maxDepth: Int): DataFrame =
+    seedDistancesWithin(edges, seeds, maxDepth, Checkpoints.BroadcastRowLimit)
+
+  /** [[seedDistances]] with the frontier's row limit (the specs' shuffle-join seam). */
+  private[operators] def seedDistancesWithin(edges: DataFrame, seeds: DataFrame, maxDepth: Int,
+                                             rowLimit: Long): DataFrame =
+    MetricsListener.withJobScope(edges.sparkSession.sparkContext, "Graph.seedDistances") {
     val e = Checkpoints.materializeOnce(edges)
     // Spread floor scoped to the loop: each round's frontier dedup is the
     // CPU-dense small-byte final aggregate byte-based AQE coalescing
@@ -173,8 +175,8 @@ object Graph {
       var frontierRows = frontier.count()
       var r = 1
       while (r <= maxDepth && frontierRows > 0) {
-        val bcast = broadcastFrontier && frontierRows <= Checkpoints.BroadcastRowLimit
-        val newNodes = expandOnce(e, frontier, dist, r, bcast).localCheckpoint(true)
+        val newNodes = expandOnce(e, Checkpoints.broadcastWithin(frontier, frontierRows, rowLimit),
+          dist, r).localCheckpoint(true)
         dist = dist.union(newNodes).localCheckpoint(true)
         frontier = newNodes
         frontierRows = frontier.count()
@@ -189,24 +191,26 @@ object Graph {
     * the build side of the REAL round body (the loop's checkpoints hide
     * the inner joins from the final plan). */
   private[operators] def expandOnce(e: DataFrame, frontier: DataFrame,
-                                    dist: DataFrame, r: Int,
-                                    broadcastFrontier: Boolean): DataFrame = {
-    val f = if (broadcastFrontier) broadcast(frontier) else frontier
-    f.join(e, col("node") === col("src"))
+                                    dist: DataFrame, r: Int): DataFrame =
+    frontier.join(e, col("node") === col("src"))
       .select(col("dst").as("node")).distinct()
       .join(dist, Seq("node"), "left_anti")
       .select(col("node"), lit(r.toLong).as("dist"))
-  }
 
   /** Per-node triangle participation counts over undirected edges (u < v).
     * Each edge is directed low→high by (degree, id) rank; wedges are pairs
     * of out-neighbors of a common low node, closed by probing the
     * undirected edge set. Every triangle is found exactly once (from its
     * minimum-rank corner). Returns (node, n_tri) for nodes in ≥1 triangle.
-    * `broadcastDegrees` hints the node-sized degree table broadcast-able
-    * (right for item graphs where nodes ≪ edges); pass false on
-    * billion-node graphs and let AQE pick the join strategy. */
-  def triangleCounts(und: DataFrame, broadcastDegrees: Boolean = true): DataFrame = {
+    * The node-sized degree and adjacency tables are broadcast (right for
+    * item graphs where nodes ≪ edges) through [[Checkpoints.broadcastWithin]]
+    * on row counts observed on their own checkpoints. */
+  def triangleCounts(und: DataFrame): DataFrame =
+    triangleCountsWithin(und, Checkpoints.BroadcastRowLimit)
+
+  /** [[triangleCounts]] with the tables' row limit (the specs' shuffle-join seam). */
+  private[operators] def triangleCountsWithin(und: DataFrame, rowLimit: Long): DataFrame =
+    MetricsListener.withJobScope(und.sparkSession.sparkContext, "Graph.triangleCounts") {
     // Materialized once: the undirected set feeds degree counting (twice,
     // via symmetrize's union), edge direction, and the closing probe.
     val u = Checkpoints.materializeOnce(
@@ -220,11 +224,11 @@ object Graph {
     // nodes 3-7/11-15/20-24/28-32; the round-19 interleaved A/B in
     // OPTIMIZATION_r19.md §2 reads the cut as 5.10→4.07 s cold,
     // 1.86→1.68 s warm at sf0.1).
-    val deg = degrees(u).select(col("node").as("n"), col("deg").as("d"))
-      .localCheckpoint(true)
+    val (deg, degRows) = checkpointCounted(
+      degrees(u).select(col("node").as("n"), col("deg").as("d")), "the triangle degree table")
     // Direct each edge from its lower-(deg, id) endpoint. Rank packs into a
     // single struct comparison so the join condition stays codegen-simple.
-    val dl = if (broadcastDegrees) broadcast(deg) else deg
+    val dl = Checkpoints.broadcastWithin(deg, degRows, rowLimit)
     val withDeg = u
       .join(dl.select(col("n").as("u2"), col("d").as("du")), col("u") === col("u2"))
       .join(dl.select(col("n").as("v2"), col("d").as("dv")), col("v") === col("v2"))
@@ -239,15 +243,14 @@ object Graph {
     // work is one in-row intersect of two out-neighbor arrays, each
     // bounded ~O(√E) by the degree ordering. The node-keyed adjacency
     // table is |E| longs total — broadcast under the same item-graph
-    // assumption as the degree table (flag off → AQE shuffle joins).
+    // assumption and row gate as the degree table.
     // Materialized for the same reason as `deg`: two broadcast builds
     // below would otherwise each re-run the adjacency aggregation AND
     // its whole `directed` upstream (base scan + two broadcast probes).
-    // Node-keyed, |E| longs total — the same size class the broadcast
-    // flag already commits to holding in memory.
-    val adj = directed.groupBy(col("lo").as("n")).agg(collect_list(col("hi")).as("nbrs"))
-      .localCheckpoint(true)
-    val adjB = if (broadcastDegrees) broadcast(adj) else adj
+    val (adj, adjRows) = checkpointCounted(
+      directed.groupBy(col("lo").as("n")).agg(collect_list(col("hi")).as("nbrs")),
+      "the triangle adjacency table")
+    val adjB = Checkpoints.broadcastWithin(adj, adjRows, rowLimit)
     // Inner joins: an edge whose `hi` endpoint has no out-neighbors closes
     // no triangle, so it can drop out before the intersect.
     val tris = directed
@@ -281,9 +284,8 @@ object Graph {
     * survivor set — no per-node iteration state, lineage is linear in
     * `rounds`, and each round is checkpointed so the DAG never re-derives
     * earlier rounds through the double edge reference. */
-  def kCorePeel(und: DataFrame, k: Int, rounds: Int,
-                broadcastDrops: Boolean = true): DataFrame =
-    kCorePeelCounted(und, k, rounds, broadcastDrops)._1
+  def kCorePeel(und: DataFrame, k: Int, rounds: Int): DataFrame =
+    kCorePeelCounted(und, k, rounds)._1
 
   /** [[kCorePeel]] plus the number of edge-filter rounds actually
     * EXECUTED — peeling early-exits as soon as a round's drop set is
@@ -291,13 +293,14 @@ object Graph {
     * identity (the anti-joins filter nothing, the degrees don't move).
     * The fixed-round hash contract is therefore preserved bit-for-bit
     * while real graphs, which converge in a few rounds, stop paying for
-    * the requested-round tail. The drop set is already an eager
-    * localCheckpoint, so the emptiness probe reads materialized
-    * node-sized partitions — no extra pass over the edge frame. */
+    * the requested-round tail. The drop set's row count, observed on its
+    * own eager checkpoint, feeds both the emptiness test and the
+    * broadcast gate without a job. */
   private[operators] def kCorePeelCounted(
       und: DataFrame, k: Int, rounds: Int,
-      broadcastDrops: Boolean = true): (DataFrame, Int) = {
+      rowLimit: Long = Checkpoints.BroadcastRowLimit): (DataFrame, Int) = {
     require(k >= 1 && rounds >= 1, "k >= 1, rounds >= 1")
+    MetricsListener.withJobScope(und.sparkSession.sparkContext, "Graph.kCorePeel") {
     var edges = Checkpoints.materializeOnce(
       und.select(col("u").cast("long").as("u"), col("v").cast("long").as("v")))
     var executed = 0
@@ -307,8 +310,7 @@ object Graph {
       // node-sized (and shrink every round), so under the item-graph
       // assumption both filters are broadcast anti-joins and the
       // edge-scale frame never shuffles inside a round — only the degree
-      // count's map-side-combined (node, n) rows do. Pass
-      // broadcastDrops=false on billion-node graphs → AQE shuffle joins.
+      // count's map-side-combined (node, n) rows do.
       // Only the NODE-SIZED drop set is checkpointed per round; the edge
       // frame stays a lazy filter chain over the one materialized base,
       // so a round costs a base scan + r broadcast hash probes instead of
@@ -321,11 +323,11 @@ object Graph {
       // and 4.58 vs 5.39 s warm in checkpoint's favor — the per-round
       // degree scan is bounded by the anti-join probe chain, not row
       // deserialization. Rejected; the checkpoint base stays.
-      val drop0 = degrees(edges).where(col("deg") < k).select("node")
-        .localCheckpoint(true)
-      if (drop0.isEmpty) fixpoint = true
+      val (drop0, dropRows) = checkpointCounted(
+        degrees(edges).where(col("deg") < k).select("node"), s"k-core peel round $executed")
+      if (dropRows == 0L) fixpoint = true
       else {
-        val drop = if (broadcastDrops) broadcast(drop0) else drop0
+        val drop = Checkpoints.broadcastWithin(drop0, dropRows, rowLimit)
         edges = edges
           .join(drop.select(col("node").as("u")), Seq("u"), "left_anti")
           .join(drop.select(col("node").as("v")), Seq("v"), "left_anti")
@@ -333,6 +335,7 @@ object Graph {
       }
     }
     (degrees(edges), executed)
+    }
   }
 
   /** True when one more peel round changes nothing — i.e. `rounds` already
@@ -341,6 +344,14 @@ object Graph {
     * filter on its final degrees — not a second full peel. */
   def kCoreConverged(und: DataFrame, k: Int, rounds: Int): Boolean =
     kCorePeel(und, k, rounds).where(col("deg") < k).isEmpty
+
+  /** `df.localCheckpoint(eager = true)` with its row count, observed on
+    * that same job: no count job, and no job at all beyond the cut. */
+  private def checkpointCounted(df: DataFrame, what: String): (DataFrame, Long) = {
+    val obs = Observation()
+    val cut = df.observe(obs, count(lit(1)).as("n")).localCheckpoint(true)
+    (cut, StageReport.awaitObserved(obs, what).getAs[Long]("n"))
+  }
 
   /** Undirected degree per endpoint node of (u, v) edges. Explode form
     * for the same reason as [[symmetrize]] — this count runs once per

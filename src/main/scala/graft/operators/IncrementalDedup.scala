@@ -69,14 +69,6 @@ object IncrementalDedup {
       .map(i => when(col(s"a.mh_$i") === col(s"b.mh_$i"), 1).otherwise(0))
       .reduce(_ + _)
 
-  private def capBuckets(banded: DataFrame, maxBucketSize: Long): DataFrame =
-    if (maxBucketSize == Long.MaxValue) banded
-    else {
-      val small = banded.groupBy("band", "bucket")
-        .agg(count(lit(1)).as("__bsz")).filter(col("__bsz") <= maxBucketSize).drop("__bsz")
-      banded.join(small, Seq("band", "bucket"))
-    }
-
   /** Admit `newDocs` against `store` (a [[NearDup.minHashSignatures]]
     * table — bootstrap with [[emptyStore]]). Ids must be numeric and
     * unique across the store AND the batch (they key the store).
@@ -118,9 +110,10 @@ object IncrementalDedup {
           .agg(min(col("id").cast(store.schema("id").dataType))
             .as("matched_store_id"))
       else {
-        val nb = capBuckets(NearDup.bandedKeys(sigs, rowsPerBand), maxBucketSize)
-          .select(col("id").as("nid"), col("band"), col("bucket"))
-        val sb = capBuckets(NearDup.bandedKeys(store, rowsPerBand), maxBucketSize)
+        def capped(sigTable: DataFrame) = NearDup.capBuckets(
+          NearDup.bandedKeys(sigTable, rowsPerBand), Seq("band", "bucket"), maxBucketSize)
+        val nb = capped(sigs).select(col("id").as("nid"), col("band"), col("bucket"))
+        val sb = capped(store)
           .select(col("id").as("sid"), col("band"), col("bucket"))
         nb.join(sb, Seq("band", "bucket"))
           .select("nid", "sid").distinct()

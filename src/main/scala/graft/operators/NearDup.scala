@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.metrics.MetricsListener
 
 /** Near-duplicate detection family: word-shingles, n-gram Jaccard,
   * MinHash+LSH banding, SimHash.
@@ -161,20 +162,6 @@ object NearDup {
         col("s.n_grams").cast("long").as("n_grams"): _*)
   }
 
-  /** LSH candidate pairs: band the wide signature (rowsPerBand hashes per
-    * band; bucket key "00=<mh0>|01=<mh1>"), self-join on (band, bucket),
-    * emit distinct candidate id pairs carrying both shingle-set sizes
-    * (`na`/`nb`, functionally determined by the ids — free to dedup).
-    *
-    * @param maxBucketSize drop buckets holding more members than this
-    *   before pair generation. A degenerate bucket of f near-identical
-    *   docs emits O(f²) candidate pairs, and no salting or AQE split can
-    *   shrink that — the pairs are real; only dropping the bucket bounds
-    *   the blowup. Same explicit recall trade as the n-gram stop-gram cap
-    *   (`maxDocFreq`): members of a dropped bucket can still pair in their
-    *   other bands. Default ∞ adds NO extra plan steps; at 100 TB set it
-    *   to a few thousand (exact-dup clusters that big belong to L1 exact
-    *   dedup, which should run first anyway). */
   /** (id, n_grams, band, bucket) band-key rows for a [[minHashSignatures]]
     * table — the LSH bucketing shared by the self-join candidate path and
     * [[IncrementalDedup]]'s new-vs-store probe. */
@@ -194,22 +181,34 @@ object NearDup {
       .select(col("id"), col("n_grams"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
   }
 
+  /** `banded` without the buckets (keyed by `keys`) holding more than
+    * `maxBucketSize` rows; `Long.MaxValue` adds no plan step. The census
+    * aggregates on the key the bucket self-join shuffles on, so that
+    * partitioning is computed once and reused. */
+  private[operators] def capBuckets(banded: DataFrame, keys: Seq[String],
+                                    maxBucketSize: Long): DataFrame =
+    if (maxBucketSize == Long.MaxValue) banded
+    else banded.join(banded.groupBy(keys.map(col): _*).agg(count(lit(1)).as("__bsz"))
+      .filter(col("__bsz") <= maxBucketSize).drop("__bsz"), keys)
+
+  /** LSH candidate pairs: band the wide signature (rowsPerBand hashes per
+    * band; bucket key "00=<mh0>|01=<mh1>"), self-join on (band, bucket),
+    * emit distinct candidate id pairs carrying both shingle-set sizes
+    * (`na`/`nb`, functionally determined by the ids — free to dedup).
+    *
+    * @param maxBucketSize drop buckets holding more members than this
+    *   before pair generation. A degenerate bucket of f near-identical
+    *   docs emits O(f²) candidate pairs, and no salting or AQE split can
+    *   shrink that — the pairs are real; only dropping the bucket bounds
+    *   the blowup. Same explicit recall trade as the n-gram stop-gram cap
+    *   (`maxDocFreq`): members of a dropped bucket can still pair in their
+    *   other bands. Default ∞ adds NO extra plan steps; at 100 TB set it
+    *   to a few thousand (exact-dup clusters that big belong to L1 exact
+    *   dedup, which should run first anyway). */
   def lshCandidates(signatures: DataFrame, rowsPerBand: Int,
                     maxBucketSize: Long = Long.MaxValue): DataFrame = {
-    val bandedAll = bandedKeys(signatures, rowsPerBand)
     val banded =
-      if (maxBucketSize == Long.MaxValue) bandedAll
-      else {
-        // Bucket-size census is a map-side-combinable aggregation on the
-        // same (band, bucket) key the self-join shuffles on, so the
-        // partitioning is computed once and reused; surviving buckets join
-        // back as a filter before any pair is generated.
-        val small = bandedAll.groupBy("band", "bucket")
-          .agg(count(lit(1)).as("__bsz"))
-          .filter(col("__bsz") <= maxBucketSize)
-          .drop("__bsz")
-        bandedAll.join(small, Seq("band", "bucket"))
-      }
+      capBuckets(bandedKeys(signatures, rowsPerBand), Seq("band", "bucket"), maxBucketSize)
     banded.as("a").join(banded.as("b"),
         col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") && col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
@@ -217,40 +216,28 @@ object NearDup {
       .distinct()
   }
 
-  /** Full MinHash-LSH near-dup: candidates from banding, verified with exact
-    * shingle Jaccard ≥ threshold.
-    *
-    * @param broadcastCandidateLimit broadcast the candidate-pair set for the
-    *   verification probe only when its measured row count is at or below
-    *   this limit. Banding usually keeps candidates tiny, but a
-    *   duplicate-heavy corpus can put O(n²) pairs in one hot bucket, and an
-    *   unconditional broadcast of that would OOM the driver — so the hint is
-    *   gated on the real count (one extra cheap job) and AQE handles the
-    *   shuffle-join path otherwise. */
   /** Shared LSH orchestration for the banded-signature pair family:
     * persist the SIGNATURES (not shingles — the banded self-join reads
     * its subtree twice, and signatures are the compact derived projection
     * a production pipeline would materialize as a table, unlike the
     * shingle explosion, which outgrows the corpus and stays uncached),
-    * gate the candidate broadcast hint on a MEASURED count (a
-    * duplicate-heavy corpus can put O(n²) pairs in one hot bucket and an
-    * unconditional broadcast would OOM the driver), narrow per-side
-    * verification inputs to candidate docs via left-semi joins, then
-    * localCheckpoint the (tiny) verified pairs so both persists release
-    * deterministically instead of leaking until session end.
-    * `verify(cand, narrowed)` builds the verification frame from the
-    * hinted candidate pairs and the suspects-only corpus subset. */
+    * gate the candidate broadcast hint on the MEASURED count
+    * ([[candidateGate]]), narrow per-side verification inputs to
+    * candidate docs via left-semi joins, then localCheckpoint the (tiny)
+    * verified pairs so both persists release deterministically instead
+    * of leaking until session end. `verify(cand, narrowed)` builds the
+    * verification frame from the hinted candidate pairs and the
+    * suspects-only corpus subset. */
   private def lshVerifyHarness(df: DataFrame, idCol: Column, sigs0: DataFrame,
-                               rowsPerBand: Int, maxBucketSize: Long,
-                               broadcastCandidateLimit: Long)(
-      verify: (DataFrame, String => DataFrame) => DataFrame): DataFrame = {
+                               rowsPerBand: Int, maxBucketSize: Long)(
+      verify: (DataFrame, String => DataFrame) => DataFrame): DataFrame =
+    MetricsListener.withJobScope(df.sparkSession.sparkContext, "NearDup.lsh") {
     val sigs = sigs0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val candPersisted = lshCandidates(sigs, rowsPerBand, maxBucketSize).persist()
-    val hintable = candPersisted.count() <= broadcastCandidateLimit
-    val cand = if (hintable) broadcast(candPersisted) else candPersisted
+    val hinted = candidateGate(candPersisted)
+    val cand = hinted(candPersisted)
     def narrowed(pairIdCol: String): DataFrame = {
-      val idsUnhinted = candPersisted.select(col(pairIdCol).as("__cid")).distinct()
-      val ids = if (hintable) broadcast(idsUnhinted) else idsUnhinted
+      val ids = hinted(candPersisted.select(col(pairIdCol).as("__cid")).distinct())
       // Checkpoint + spread: the semi-join output is candidate-bounded
       // (the suspects-only subset this harness already persists the
       // inputs of), and the verify side builds CPU-dense per-doc frames
@@ -268,12 +255,25 @@ object NearDup {
     out
   }
 
+  /** [[Checkpoints.broadcastWithin]] at [[Checkpoints.CandidateBroadcastRowLimit]]
+    * on a materialized candidate-pair set's row count (one cheap job over
+    * the persisted pairs), for that set and the frames derived from it.
+    * Banding usually keeps candidates tiny, but a duplicate-heavy corpus
+    * can put O(n²) pairs in one hot bucket, and an unconditional
+    * broadcast of that would OOM the driver. */
+  private def candidateGate(candPersisted: DataFrame): DataFrame => DataFrame = {
+    val rows = candPersisted.count()
+    Checkpoints.broadcastWithin(_, rows, Checkpoints.CandidateBroadcastRowLimit)
+  }
+
+  /** Full MinHash-LSH near-dup: candidates from banding, verified with exact
+    * shingle Jaccard ≥ threshold. The candidate broadcast is gated on the
+    * candidates' measured count ([[candidateGate]]). */
   def minHashLshPairs(df: DataFrame, idCol: Column, textCol: Column,
                       k: Int, numHashes: Int, rowsPerBand: Int, threshold: Double,
-                      broadcastCandidateLimit: Long = 5000000L,
                       maxBucketSize: Long = Long.MaxValue): DataFrame =
     lshVerifyHarness(df, idCol, minHashSignatures(df, idCol, textCol, k, numHashes),
-      rowsPerBand, maxBucketSize, broadcastCandidateLimit) { (cand, narrowed) =>
+      rowsPerBand, maxBucketSize) { (cand, narrowed) =>
       // Explode shingles ONLY for docs that appear in a candidate pair; na/nb
       // ride along on the candidates (from the signature projection), so
       // verification is intersect-count + arithmetic — no sizes aggregation.
@@ -302,8 +302,8 @@ object NearDup {
     *   documents before the self-join (the stop-gram cap transplanted to
     *   fingerprint space: a boilerplate fingerprint in f docs costs f²
     *   candidate rows; members of a dropped fingerprint can still pair via
-    *   their other fingerprints). 0 = off. */
-  /** @param minSharedFps emit a pair only when the documents share at
+    *   their other fingerprints). 0 = off.
+    * @param minSharedFps emit a pair only when the documents share at
     *   least this many selected fingerprints. 1 keeps the raw MOSS
     *   guarantee; 2+ is the precision cut MOSS itself ranks by — a pair
     *   that is a genuine near-dup at meaningful Jaccard shares many
@@ -344,13 +344,13 @@ object NearDup {
     * Emits (id_a, id_b, jaccard), the [[DupClusters]] edge shape. */
   def winnowJaccardPairs(df: DataFrame, idCol: Column, textCol: Column,
                          k: Int, w: Int, threshold: Double,
-                         maxFpFreq: Long = 0L, minSharedFps: Int = 1,
-                         broadcastCandidateLimit: Long = 5000000L): DataFrame = {
+                         maxFpFreq: Long = 0L, minSharedFps: Int = 1): DataFrame =
+    MetricsListener.withJobScope(df.sparkSession.sparkContext, "NearDup.winnow") {
     graft.plans.GraftExtensions.register(df.sparkSession)
     val candPersisted = winnowCandidatePairs(df, idCol, textCol, k, w, maxFpFreq, minSharedFps)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out = verifyJaccardCandidates(df, idCol, textCol, k, threshold,
-      candPersisted, broadcastCandidateLimit).localCheckpoint(true)
+    val out = verifyJaccardCandidates(df, idCol, textCol, k, threshold, candPersisted)
+      .localCheckpoint(true)
     candPersisted.unpersist(false)
     out
   }
@@ -362,16 +362,14 @@ object NearDup {
     * Emits (id_a, id_b, jaccard), the [[DupClusters]] edge shape. */
   private def verifyJaccardCandidates(df: DataFrame, idCol: Column, textCol: Column,
                                       k: Int, threshold: Double,
-                                      candPersisted: DataFrame,
-                                      broadcastCandidateLimit: Long): DataFrame = {
+                                      candPersisted: DataFrame): DataFrame = {
     graft.plans.GraftExtensions.register(df.sparkSession)
-    val hintable = candPersisted.count() <= broadcastCandidateLimit
-    val cand = if (hintable) broadcast(candPersisted) else candPersisted
+    val hinted = candidateGate(candPersisted)
+    val cand = hinted(candPersisted)
     // Shingle only docs appearing in a candidate pair; the per-doc gram
     // count rides along so |A|/|B| need no separate sizes aggregation.
     def candSide(pairIdCol: String): DataFrame = {
-      val idsUnhinted = candPersisted.select(col(pairIdCol).as("__cid")).distinct()
-      val ids = if (hintable) broadcast(idsUnhinted) else idsUnhinted
+      val ids = hinted(candPersisted.select(col(pairIdCol).as("__cid")).distinct())
       df.join(ids, idCol === col("__cid"), "left_semi")
         .select(idCol.as("id"), call_function("graft_shingles", textCol, lit(k)).as("g"))
         .where(col("id").isNotNull)
@@ -681,13 +679,12 @@ object NearDup {
   def weightedMinHashLshPairs(df: DataFrame, idCol: Column, textCol: Column,
                               k: Int, numHashes: Int, rowsPerBand: Int,
                               threshold: Double, tfCap: Int,
-                              broadcastCandidateLimit: Long = 5000000L,
                               maxBucketSize: Long = Long.MaxValue): DataFrame = {
     require(threshold > 0 && threshold <= 1, s"threshold in (0,1], got $threshold")
     val thrPpm = math.round(threshold * 1e6)
     lshVerifyHarness(df, idCol,
       weightedMinHashSignatures(df, idCol, textCol, k, numHashes, tfCap),
-      rowsPerBand, maxBucketSize, broadcastCandidateLimit) { (cand, narrowed) =>
+      rowsPerBand, maxBucketSize) { (cand, narrowed) =>
       def tfSide(pairIdCol: String): DataFrame =
         cappedTf(narrowed(pairIdCol), idCol, textCol, k, tfCap)
           .select(col("id").as(pairIdCol), col("gram"), col("tf").as(s"__tf_$pairIdCol"))

@@ -81,22 +81,6 @@ object Profiler {
                 AS BIGINT)""").as("gini_bp"))
   }
 
-  /** Order-independent content fingerprint `(n_rows, fp_sum, fp_xor)` —
-    * the cross-cluster/cross-engine equality check for migrations,
-    * replication and backfills: two tables with equal fingerprints over
-    * the same columns hold the same multiset of rows, computed WITHOUT
-    * moving either table (one aggregation, no sort, no join; commutative
-    * reductions, so partitioning and row order are irrelevant).
-    *
-    * Per-row hash: 32 bits from md5 over the `\u0001`-joined,
-    * null-sentineled string casts (the portable md5-digit idiom of
-    * [[Sampling.hashBucket]]). Two independent reductions guard each
-    * other's blind spots: `fp_sum` (modular sum — DECIMAL(38,0)
-    * accumulator so ~10²⁹ rows cannot wrap it, then mod the largest
-    * 63-bit prime; an even number of identical rows CAN'T cancel) and
-    * `fp_xor` (bitwise — catches value permutations sum is blind to).
-    * Cast floating-point columns to a fixed decimal scale first: raw
-    * float→string rendering is not engine-portable. */
   /** Functional-dependency profiling (R63): does `lhs → rhs` hold — is
     * each lhs value paired with at most one (non-null) rhs value? The
     * key/dependency-discovery check a schema reviewer runs before
@@ -123,6 +107,22 @@ object Profiler {
     }.reduce(_ unionByName _)
   }
 
+  /** Order-independent content fingerprint `(n_rows, fp_sum, fp_xor)` —
+    * the cross-cluster/cross-engine equality check for migrations,
+    * replication and backfills: two tables with equal fingerprints over
+    * the same columns hold the same multiset of rows, computed WITHOUT
+    * moving either table (one aggregation, no sort, no join; commutative
+    * reductions, so partitioning and row order are irrelevant).
+    *
+    * Per-row hash: 32 bits from md5 over the `\u0001`-joined,
+    * null-sentineled string casts (the portable md5-digit idiom of
+    * [[Sampling.hashBucket]]). Two independent reductions guard each
+    * other's blind spots: `fp_sum` (modular sum — DECIMAL(38,0)
+    * accumulator so ~10²⁹ rows cannot wrap it, then mod the largest
+    * 63-bit prime; an even number of identical rows CAN'T cancel) and
+    * `fp_xor` (bitwise — catches value permutations sum is blind to).
+    * Cast floating-point columns to a fixed decimal scale first: raw
+    * float→string rendering is not engine-portable. */
   def tableFingerprint(df: DataFrame, cols: Seq[String]): DataFrame = {
     require(cols.nonEmpty, "cols must be non-empty")
     val canon = concat_ws("\u0001",

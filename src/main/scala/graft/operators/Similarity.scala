@@ -105,19 +105,9 @@ object Similarity {
     val bandedAll = base
       .select(col("id"), col("vec"), col("nrm"), explode(array(tableBuckets: _*)).as("tb"))
       .select(col("id"), col("vec"), col("nrm"), col("tb.tbl").as("tbl"), col("tb.bucket").as("bucket"))
-    // Same degenerate-bucket bound as NearDup.lshCandidates: a bucket of f
-    // near-identical vectors yields O(f²) pairs that no skew handling can
-    // shrink; above the cap the bucket is dropped (recall trade — members
-    // can still pair in their other tables). Default ∞ = no extra steps.
-    val banded =
-      if (maxBucketSize == Long.MaxValue) bandedAll
-      else {
-        val small = bandedAll.groupBy("tbl", "bucket")
-          .agg(count(lit(1)).as("__bsz"))
-          .filter(col("__bsz") <= maxBucketSize)
-          .drop("__bsz")
-        bandedAll.join(small, Seq("tbl", "bucket"))
-      }
+    // Same degenerate-bucket bound as NearDup.lshCandidates (recall trade:
+    // members of a dropped bucket can still pair in their other tables).
+    val banded = NearDup.capBuckets(bandedAll, Seq("tbl", "bucket"), maxBucketSize)
     banded.as("a").join(banded.as("b"),
         col("a.tbl") === col("b.tbl") && col("a.bucket") === col("b.bucket") && col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"),

@@ -1119,9 +1119,6 @@ object RQueries {
     graft.operators.Profiler.categoryConcentration(
       Tables.customer(s, d), Seq("c_mktsegment", "c_nationkey"))
 
-  /** R45: snapshot CDC — two deterministic derivations of `customer` play
-    * yesterday's and today's full drops; diff = one full outer join +
-    * narrow change classification. */
   /** R48: incremental aggregate maintenance — fold the retraction stream
     * between q69's two snapshots into the OLD snapshot's per-segment
     * (count, sum) state; the oracle RECOMPUTES the aggregate from the new
@@ -1153,6 +1150,9 @@ object RQueries {
     graft.operators.Profiler.tableFingerprint(Tables.customer(s, d),
       Seq("c_custkey", "c_name", "c_mktsegment"))
 
+  /** R45: snapshot CDC — two deterministic derivations of `customer` play
+    * yesterday's and today's full drops; diff = one full outer join +
+    * narrow change classification. */
   def q69(s: SparkSession, d: String): DataFrame = {
     val c = Tables.customer(s, d)
     val oldSnap = c.filter(col("c_custkey") % 10 =!= 3)

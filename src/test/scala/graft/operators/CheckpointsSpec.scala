@@ -136,6 +136,26 @@ class CheckpointsSpec extends SparkSpec {
     assert(q.count() == 2)
   }
 
+  test("broadcastWithin hints at the limit and not one row above it (executed plan)") {
+    // with the planner's own size-based broadcast off, a BroadcastHashJoin
+    // in the executed plan can only come from the gate's hint
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = ss.conf.getOption(key)
+    ss.conf.set(key, "-1")
+    try {
+      val small = Seq(1L, 2L).toDF("k")
+      val big = ss.range(1000).select(col("id").as("k"), (col("id") % 7).as("v"))
+      def executed(limit: Long): String = {
+        val j = big.join(Checkpoints.broadcastWithin(small, small.count(), limit), "k")
+        assert(j.collect().length == 2)
+        j.queryExecution.executedPlan.toString
+      }
+      assert(executed(2L).contains("BroadcastHashJoin"), "2 rows at a limit of 2 broadcast")
+      val above = executed(1L)
+      assert(!above.contains("BroadcastHashJoin") && above.contains("SortMergeJoin"), above)
+    } finally prev.fold(ss.conf.unset(key))(ss.conf.set(key, _))
+  }
+
   test("BFS expansion join builds on the FRONTIER side, never the edges (plan pin)") {
     // the round-14 inversion: stale checkpoint stats made the planner
     // broadcast the edge set; the explicit hint pins the build side.
@@ -146,7 +166,7 @@ class CheckpointsSpec extends SparkSpec {
     val e = Graph.symmetrize(und)
     val dist = und.select(col("u").as("node"), lit(0L).as("dist"))
       .where(col("node") % 100 === 0).distinct().localCheckpoint(true)
-    val round = Graph.expandOnce(e, dist, dist, r = 1, broadcastFrontier = true)
+    val round = Graph.expandOnce(e, Checkpoints.broadcastWithin(dist, dist.count()), dist, r = 1)
     round.count()
     val plan = round.queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"), plan.take(2000))

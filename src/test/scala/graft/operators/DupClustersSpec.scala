@@ -35,17 +35,34 @@ class DupClustersSpec extends SparkSpec {
     assert(rounds <= 8, s"expected O(log n) rounds on a 33-chain, took $rounds")
   }
 
-  test("shuffle-join path (broadcastLabels=false) labels identically") {
+  test("shuffle-join path (labels past the row limit) labels identically") {
     // the row-guard degradation path must be CORRECT, not just non-OOM
     val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L), (20L, 21L), (21L, 20L))
       .toDF("id_a", "id_b")
     val bcast = DupClusters.connectedComponents(edges)
       .as[(Long, Long)].collect().toSet
-    val shuffle = DupClusters.connectedComponents(edges, broadcastLabels = false)
+    val shuffle = DupClusters.connectedComponentsWithRounds(edges, rowLimit = 0L)._1
       .as[(Long, Long)].collect().toSet
     assert(bcast == shuffle)
     assert(shuffle == Set((1L, 1L), (2L, 1L), (3L, 1L), (10L, 10L), (11L, 10L),
       (20L, 20L), (21L, 20L)))
+  }
+
+  test("the loop's jobs name the operator after the caller's description") {
+    val sc = ss.sparkContext
+    val edges = Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b")
+    val metrics = new graft.metrics.MetricsListener(sc)
+    sc.setJobDescription("dedup b1")
+    try {
+      val from = metrics.mark()
+      DupClusters.connectedComponents(edges)
+      val jobs = metrics.window(from, metrics.mark()).jobs
+      assert(jobs.nonEmpty && jobs.forall(_.desc == "dedup b1/DupClusters"), jobs.map(_.desc).distinct)
+      assert(sc.getLocalProperty("spark.job.description") == "dedup b1")
+    } finally {
+      sc.setJobDescription(null)
+      sc.removeSparkListener(metrics)
+    }
   }
 
   test("empty edge set yields an empty labeling without iteration blowup") {

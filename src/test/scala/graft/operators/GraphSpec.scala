@@ -70,13 +70,34 @@ class GraphSpec extends SparkSpec {
     assert(d1 == Map(1L -> 0L, 2L -> 1L))
   }
 
-  test("seedDistances shuffle-join path (broadcastFrontier=false) matches") {
+  test("seedDistances shuffle-join path (frontier past the row limit) matches") {
     val und = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)).toDF("u", "v")
     val seeds = Seq(1L).toDF("node")
-    def run(b: Boolean) = Graph.seedDistances(Graph.symmetrize(und), seeds,
-      maxDepth = 3, broadcastFrontier = b).as[(Long, Long)].collect().toMap
-    assert(run(true) == run(false))
-    assert(run(false) == Map(1L -> 0L, 2L -> 1L, 3L -> 2L, 4L -> 3L))
+    def run(limit: Long) = Graph.seedDistancesWithin(Graph.symmetrize(und), seeds,
+      maxDepth = 3, rowLimit = limit).as[(Long, Long)].collect().toMap
+    assert(run(Checkpoints.BroadcastRowLimit) == run(0L))
+    assert(run(0L) == Map(1L -> 0L, 2L -> 1L, 3L -> 2L, 4L -> 3L))
+  }
+
+  test("triangleCounts shuffle-join path (tables past the row limit) matches") {
+    // K4 (4 triangles, 3 per node) plus a triangle sharing node 4 and a pendant
+    val und = edges((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L),
+      (4L, 5L), (5L, 6L), (4L, 6L), (6L, 7L))
+    def run(limit: Long) = Graph.triangleCountsWithin(und, rowLimit = limit)
+      .as[(Long, Long)].collect().toMap
+    assert(run(Checkpoints.BroadcastRowLimit) == run(0L))
+    assert(run(0L) == Map(1L -> 3L, 2L -> 3L, 3L -> 3L, 4L -> 4L, 5L -> 1L, 6L -> 1L))
+  }
+
+  test("kCorePeel shuffle-join path (drop set past the row limit) matches") {
+    val und = edges((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L),
+      (4L, 5L), (5L, 6L))
+    def run(limit: Long) = Graph.kCorePeelCounted(und, k = 2, rounds = 5, rowLimit = limit)
+    val (hinted, hintedRounds) = run(Checkpoints.BroadcastRowLimit)
+    val (shuffled, shuffledRounds) = run(0L)
+    assert(hintedRounds == 2 && shuffledRounds == 2)
+    assert(hinted.as[(Long, Long)].collect().toMap == shuffled.as[(Long, Long)].collect().toMap)
+    assert(shuffled.as[(Long, Long)].collect().toMap == Map(1L -> 3L, 2L -> 3L, 3L -> 3L, 4L -> 3L))
   }
 
   test("seedDistances: a node reachable from two seeds takes the minimum") {
