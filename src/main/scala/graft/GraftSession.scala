@@ -10,10 +10,30 @@ import org.apache.spark.sql.SparkSession
   * shuffle path.
   */
 object GraftSession {
+
+  /** Entries of Spark's JVM-wide cache of compiled generated classes
+    * (`spark.sql.codegen.cache.maxEntries`, Spark's default 100). A
+    * long-lived driver re-plans the same shapes batch after batch; once the
+    * cache is smaller than that working set, LRU order evicts every class
+    * before its next use and janino recompiles all of it on each repeat.
+    * Measured working sets (distinct generated classes per JVM, one cold
+    * and the warm iterations of `perfbench`): `stream_store` 212 (432 with
+    * 100 entries: its warm iterations recompiled everything), `query_mix`
+    * 89, `mailing_daily` 83. The cache is split into 4 LRU segments, so the
+    * cap sits at more than 2x the largest working set. Each cached class
+    * stays resident: `stream_store`'s peak RSS went up about 5%.
+    *
+    * The setting is STATIC: Spark reads it once per JVM, when
+    * `CodeGenerator` first initializes. A session built outside
+    * [[builder]], or built after generated code has already been compiled
+    * in the JVM, keeps Spark's 100. */
+  val CodegenCacheEntries = 512
+
   def builder(appName: String = "graft"): SparkSession.Builder =
     SparkSession
       .builder()
       .appName(appName)
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

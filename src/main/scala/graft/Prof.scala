@@ -8,7 +8,9 @@ import graft.pipeline.StageReport
 /** Query profiler: runs each selected registered query cold, then warm,
   * and splits each run's wall time down the stack — Spark jobs (busy vs
   * driver gap), then the heaviest Spark stages (tasks, max/median task,
-  * shuffle bytes, GC). Usage:
+  * shuffle bytes, GC). Each run line also counts the generated classes
+  * compiled during the run ([[MetricsListener.Window.compiles]]): a warm
+  * run that compiles again missed Spark's codegen cache. Usage:
   * `sbt "runMain graft.Prof <sfDir> <cpus> <queries>"`, where `<queries>`
   * takes [[Bench.selectOnly]]'s syntax (`q103,q168_stream_netting`).
   *
@@ -48,7 +50,7 @@ object Prof {
 
   private def report(tag: String, rows: Long, w: MetricsListener.Window): Unit = {
     println(f"== $tag wall=${w.wallMs / 1e3}%.3fs rows=$rows jobs=${w.jobs.size} " +
-      f"busy=${w.busyMs / 1e3}%.3fs gap=${w.gapMs / 1e3}%.3fs")
+      f"busy=${w.busyMs / 1e3}%.3fs gap=${w.gapMs / 1e3}%.3fs compiles=${w.compiles}")
     // Idle time before each job, from the window start, so the first job's
     // planning time shows; a job overlapping an earlier one shows 0.
     w.jobGaps.foreach { case (j, gapMs) =>

@@ -2,6 +2,7 @@ package graft.metrics
 
 import org.apache.spark.SparkContext
 import org.apache.spark.graftbench.BusDrain
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
 
 import scala.collection.mutable
@@ -10,7 +11,9 @@ import scala.collection.mutable
   * [[graft.Prof]]). It logs every Spark job (start, end, description),
   * every finished task (stage, duration, shuffle read/write, spill, GC)
   * and every stage's name, and answers WINDOWS taken between two
-  * [[mark]]s.
+  * [[mark]]s. A mark also reads how many generated classes janino has
+  * compiled so far, so a window tells how much code its actions compiled
+  * rather than found in Spark's codegen cache.
   *
   * Fencing: events reach a listener asynchronously, so [[mark]] drains the
   * listener bus ([[BusDrain]]) before it reads the log positions. A window
@@ -60,11 +63,11 @@ final class MetricsListener(sc: SparkContext) extends SparkListener {
   }
 
   /** A fence: the wall clock, then the log positions once every event
-    * posted so far has been delivered. */
+    * posted so far has been delivered, and the compile count. */
   def mark(): Mark = {
     val at = System.currentTimeMillis()
     BusDrain.drain(sc)
-    synchronized(Mark(jobs.size, tasks.size, at))
+    synchronized(Mark(jobs.size, tasks.size, at, compileCount()))
   }
 
   /** Everything recorded between two marks of this listener. */
@@ -72,7 +75,8 @@ final class MetricsListener(sc: SparkContext) extends SparkListener {
     val js = jobs.slice(from.jobIdx, until.jobIdx).toVector
     val ids = js.map(_.id).toSet
     val ts = tasks.slice(from.taskIdx, until.taskIdx).filter(t => stageJob.get(t.stage).exists(ids)).toVector
-    Window(from.atMs, until.atMs, js, ts, ts.map(_.stage).distinct.map(s => s -> stageNames.getOrElse(s, "?")).toMap)
+    Window(from.atMs, until.atMs, js, ts, ts.map(_.stage).distinct.map(s => s -> stageNames.getOrElse(s, "?")).toMap,
+      until.compiles - from.compiles)
   }
 }
 
@@ -80,7 +84,15 @@ object MetricsListener {
   final case class Job(id: Int, desc: String, startMs: Long, endMs: Long = -1L)
   final case class Task(stage: Int, durMs: Long, shReadBytes: Long, shWriteBytes: Long,
                         spillBytes: Long, gcMs: Long)
-  final case class Mark(jobIdx: Int, taskIdx: Int, atMs: Long)
+  final case class Mark(jobIdx: Int, taskIdx: Int, atMs: Long, compiles: Long)
+
+  /** Generated classes janino has compiled in this JVM so far: Spark
+    * times every compile of a codegen-cache miss into one JVM-wide
+    * histogram. In local mode the driver and the executors share the JVM
+    * and the cache, so this counts both; on a cluster it counts the
+    * driver's compiles only. */
+  def compileCount(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
   final case class StageStats(stage: Int, name: String, tasks: Int, sumMs: Long, maxMs: Long,
                               medMs: Long, shReadBytes: Long, shWriteBytes: Long, gcMs: Long)
 
@@ -117,8 +129,11 @@ object MetricsListener {
     withJobDescription(sc,
       Option(sc.getLocalProperty("spark.job.description")).fold(label)(d => s"$d/$label"))(body)
 
+  /** What happened between two marks. `compiles` is the [[compileCount]]
+    * difference: generated classes compiled by ANY thread of the JVM in
+    * the window (JVM-wide, see there), not only by the window's jobs. */
   final case class Window(fromMs: Long, untilMs: Long, jobs: Seq[Job], tasks: Seq[Task],
-                          stageNames: Map[Int, String]) {
+                          stageNames: Map[Int, String], compiles: Long) {
     def wallMs: Long = untilMs - fromMs
     def busyMs: Long = MetricsListener.busyMs(jobs, fromMs, untilMs)
     /** Wall time with no job in flight: planning, driver loops, file-system

@@ -116,9 +116,11 @@ object NearDup {
         // census still runs first (map-side-combined counts — tiny
         // shuffle) so degenerate grams are dropped BEFORE any list is
         // collected.
-        val hot = shAll.groupBy("gram").agg(count(lit(1)).as("__df"))
-          .filter(col("__df") > maxDocFreq).select(col("gram").as("__hot_gram"))
-          .localCheckpoint(true)
+        val hot = MetricsListener.withJobScope(df.sparkSession.sparkContext, "NearDup.ngram") {
+          shAll.groupBy("gram").agg(count(lit(1)).as("__df"))
+            .filter(col("__df") > maxDocFreq).select(col("gram").as("__hot_gram"))
+            .localCheckpoint(true)
+        }
         shAll.join(hot, col("gram") === col("__hot_gram"), "left_anti")
           .groupBy("gram")
           .agg(sort_array(collect_list(struct(col("id"), col("n")))).as("ds"))

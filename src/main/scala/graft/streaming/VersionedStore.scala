@@ -33,14 +33,16 @@ import graft.metrics.MetricsListener
   * unioned at read) grow one directory per batch for the stream's
   * lifetime — an unbounded small-files walk at production lifetimes.
   * [[compactLogs]] rewrites every committed version EXCEPT the newest
-  * into one `c<coveredId>` directory (marker-last, same torn-write
-  * discipline as [[commitBatch]]) and [[readLog]] reads compaction +
-  * b-versions with id > coveredId, so a crash between the compaction
-  * marker and the covered-directory deletes can never double-count —
-  * superseded directories are excluded BY ID, not by absence, and the
-  * next compaction sweeps the stragglers. The newest b-version is never
-  * covered: state reads ([[readLatest]]) and the at-least-once replay
-  * check (the marker of the one batch Spark can re-run after a crash —
+  * into one `c<coveredId>` directory, written through the same
+  * [[publish]] as [[commitBatch]] (sub-stores written concurrently,
+  * marker last, a failed write deletes the torn directory), and
+  * [[readLog]] reads compaction + b-versions with id > coveredId, so a
+  * crash between the compaction marker and the covered-directory
+  * deletes can never double-count — superseded directories are excluded
+  * BY ID, not by absence, and the next compaction sweeps the stragglers.
+  * The newest b-version is never covered: state reads ([[readLatest]])
+  * and the at-least-once replay check (the marker of the one batch Spark
+  * can re-run after a crash —
   * the last one, whose own publish committed before the streaming
   * checkpoint did) both stay intact across a compaction at any point. */
 object VersionedStore {
@@ -150,13 +152,13 @@ object VersionedStore {
     target
   }
 
-  /** Write a version's INDEPENDENT sub-store frames CONCURRENTLY, then
-    * drop the commit marker. Run back to back, each write is its own
-    * Spark job paying a full plan + schedule + fs-commit round trip while
-    * the cluster sits idle between them; submitted from a small thread
-    * pool, the next write's planning and scheduling back-fill the
-    * previous one's tail (round-19 job audit: q168 8.40 → 5.89 s warm
-    * against the sequential form).
+  /** Write a version's (a batch's or a compaction's) INDEPENDENT
+    * sub-store frames CONCURRENTLY, then drop the commit marker. Run
+    * back to back, each write is its own Spark job paying a full plan +
+    * schedule + fs-commit round trip while the cluster sits idle between
+    * them; submitted from a small thread pool, the next write's planning
+    * and scheduling back-fill the previous one's tail (round-19 job
+    * audit: q168 8.40 → 5.89 s warm against the sequential form).
     *
     * Failure: the writes run under one job group. The first failed write
     * cancels the group; every write is then waited for, the torn
@@ -232,12 +234,17 @@ object VersionedStore {
   }
 
   /** Rewrite every committed version EXCEPT the newest into one
-    * compaction directory carrying the unioned `logSubs`. Returns true
-    * when a new compaction was published. Safe to call between any two
-    * batches (e.g. from the foreachBatch body AFTER applyBatch: the
-    * just-committed version is the newest, so it is never covered and
-    * the crash-replay check stays intact); idempotent — a re-run with
-    * nothing new only sweeps directories a previous pass superseded.
+    * compaction directory carrying the unioned `logSubs`, written by
+    * [[publish]]: its jobs carry the description `<store dir>
+    * c<coveredId>`, its writes `<store dir> c<coveredId>/<sub>`, and a
+    * failed write leaves no `c<coveredId>` directory behind (the error is
+    * rethrown; readers keep reading the versions it would have covered).
+    * Returns true when a new compaction was published. Safe to call
+    * between any two batches (e.g. from the foreachBatch body AFTER
+    * applyBatch: the just-committed version is the newest, so it is
+    * never covered and the crash-replay check stays intact); idempotent —
+    * a re-run with nothing new only sweeps directories a previous pass
+    * superseded.
     *
     * READER GRACE (round-17 advice): a pass deletes only directories the
     * PREVIOUS pass already superseded (b ≤ prevCovered, c < prevCovered)
@@ -273,20 +280,18 @@ object VersionedStore {
     if (coveredId <= prevCovered) { sweep(prevCovered); return false }
     val covered = versions.init.filter(versionId(_) > prevCovered)
     val target = new Path(new Path(baseDir), f"c$coveredId%012d")
-    if (f.exists(target)) f.delete(target, true) // torn earlier attempt
-    val written = logSubs.flatMap { sub =>
-      val srcs = (prev.toSeq ++ covered).filter(v => f.exists(new Path(v, sub)))
-      // Sources whose markers disagree merge their footer schemas: the
-      // rewrite is PERMANENT (sources are later swept) — taking one file's
-      // footer schema would silently drop columns only newer versions
-      // carry (round-17 advice; the rejects-added-later precedent).
-      srcs.headOption.map { _ =>
-        val df = readSubs(spark, srcs, sub)
-        df.write.parquet(new Path(target, sub).toString)
-        sub -> df.schema
+    val label = s"${new Path(baseDir).getName} c$coveredId"
+    MetricsListener.withJobDescription(spark.sparkContext, label) {
+      val subs = logSubs.flatMap { sub =>
+        val srcs = (prev.toSeq ++ covered).filter(v => f.exists(new Path(v, sub)))
+        // Sources whose markers disagree merge their footer schemas: the
+        // rewrite is PERMANENT (sources are later swept) — taking one file's
+        // footer schema would silently drop columns only newer versions
+        // carry (round-17 advice; the rejects-added-later precedent).
+        Option.when(srcs.nonEmpty)(sub -> readSubs(spark, srcs, sub))
       }
+      publish(spark, target, label, subs)
     }
-    writeMarker(f, target, written)
     // Grace sweep: only what the PREVIOUS pass superseded (see scaladoc).
     sweep(prevCovered)
     true

@@ -10,7 +10,7 @@ import scala.concurrent.duration._
 class MetricsListenerSpec extends SparkSpec {
 
   private def window(from: Long, until: Long, jobs: Job*): Window =
-    Window(from, until, jobs, Nil, Map.empty)
+    Window(from, until, jobs, Nil, Map.empty, 0L)
 
   test("busy is the union of overlapping jobs: never above wall, gap never negative") {
     val w = window(0L, 1000L, Job(1, "a", 0L, 600L), Job(2, "b", 100L, 700L), Job(3, "c", 200L, 900L))
@@ -39,6 +39,21 @@ class MetricsListenerSpec extends SparkSpec {
     assert(MetricsListener.busyMs(Seq(Job(1, "", 100L, 200L), Job(2, "", 0L, 500L)), 0L, 1000L) == 500L)
     assert(MetricsListener.busyMs(Seq(Job(1, "", -50L, 80L), Job(2, "", 900L, 1200L)), 0L, 1000L) == 180L)
     assert(MetricsListener.busyMs(Nil, 0L, 1000L) == 0L)
+  }
+
+  test("a window around a new plan counts its compiles; a re-run of the same plan compiles nothing") {
+    val metrics = new MetricsListener(ss.sparkContext)
+    // a literal no other spec uses, so the first run's generated code is new to the JVM
+    def run(): Unit = ss.range(0L, 10L, 1L, 1).select((col("id") * 982451653L + 7L).as("x")).collect(): Unit
+    def compilesOf(body: => Unit): Long = {
+      val from = metrics.mark()
+      body
+      metrics.window(from, metrics.mark()).compiles
+    }
+    try {
+      assert(compilesOf(run()) >= 1L)
+      assert(compilesOf(run()) == 0L, "the re-run found its classes in the codegen cache")
+    } finally ss.sparkContext.removeSparkListener(metrics)
   }
 
   test("fenced windows hold their own action's jobs and shuffle bytes, not an earlier action's tail") {

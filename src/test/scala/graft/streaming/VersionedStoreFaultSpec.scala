@@ -1,13 +1,27 @@
 package graft.streaming
 
 import graft.SparkSpec
+import graft.metrics.MetricsListener
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.mapreduce.JobContext
+import org.apache.spark.internal.io.FileCommitProtocol.TaskCommitMessage
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.datasources.SQLHadoopMapReduceCommitProtocol
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 
+/** Spark's commit protocol, except that a write into a directory named
+  * `right` fails at job commit, after its tasks have written their files. */
+class FailRightCommitProtocol(jobId: String, path: String, dynamicPartitionOverwrite: Boolean)
+    extends SQLHadoopMapReduceCommitProtocol(jobId, path, dynamicPartitionOverwrite) {
+  override def commitJob(jobContext: JobContext, taskCommits: Seq[TaskCommitMessage]): Unit =
+    if (new Path(path).getName == "right") throw new IllegalStateException("injected compaction failure")
+    else super.commitJob(jobContext, taskCommits)
+}
+
 /** Fault injection on the versioned store's one commit path: a sub-store
-  * write that fails while a sibling write is still running, and a
-  * compaction that crashed before its marker. */
+  * write that fails while a sibling write is still running, a compaction
+  * whose write fails, and a compaction that crashed before its marker. */
 class VersionedStoreFaultSpec extends SparkSpec {
   import ss.implicits._
 
@@ -57,6 +71,38 @@ class VersionedStoreFaultSpec extends SparkSpec {
       assert(rows(VersionedStore.readLatest(ss, base, sub).get) ==
         rows(VersionedStore.readLatest(ss, clean, sub).get), s"replayed $sub differs from a clean run")
     }
+  }
+
+  test("a compaction whose write fails leaves no c directory, and readers see the rows from before") {
+    val base = tmp()
+    (0L to 2L).foreach { id =>
+      VersionedStore.commitBatch(ss, base, id)(_ =>
+        Seq("left" -> Seq((id, "l")).toDF("id", "v"), "right" -> Seq((id, "r")).toDF("id", "v")))
+    }
+    val subs = Seq("left", "right")
+    def logs() = subs.map(sub => rows(VersionedStore.readLog(ss, base, sub).get))
+    val before = logs()
+    val key = "spark.sql.sources.commitProtocolClass"
+    val protocol = ss.conf.get(key)
+    ss.conf.set(key, classOf[FailRightCommitProtocol].getName)
+    val err = try intercept[Exception](VersionedStore.compactLogs(ss, base, subs))
+      finally ss.conf.set(key, protocol)
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("injected compaction failure")),
+      s"the write's error is rethrown, got: $err")
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(base, "c000000000001")),
+      s"files of the failed compaction: ${filesUnder(s"$base/c000000000001")}")
+    assert(VersionedStore.latestCompaction(ss, base).isEmpty)
+    assert(logs() == before)
+
+    val metrics = new MetricsListener(ss.sparkContext)
+    try {
+      val from = metrics.mark()
+      assert(VersionedStore.compactLogs(ss, base, subs), "the next compaction publishes")
+      val store = new Path(base).getName
+      assert(metrics.window(from, metrics.mark()).jobs.map(_.desc).toSet == subs.map(sub => s"$store c1/$sub").toSet)
+    } finally ss.sparkContext.removeSparkListener(metrics)
+    assert(logs() == before)
   }
 
   test("a torn compaction directory is invisible to readers and the next compaction replaces it") {

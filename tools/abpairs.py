@@ -16,11 +16,15 @@ BENCHMARK.json's `run_seconds`, so both sides run the same length.
 
 Every run is kept, failures included, as one JSON line in
 `<workdir>/runs.jsonl`: side, workload, seed, exit code, the last line
-of standard output, the `jvm` seconds from the run's log and the parsed
-end-to-end metrics. The report prints the per-seed table (parent / change
-per metric), then per metric the medians, the parent's inter-quartile
-range, how many pairs the change read lower, and a verdict against the
-metric's bound in BENCHMARK.json:
+of standard output, the `jvm` seconds from the run's log, the run's
+`failed` and `attempted` operation counts and the parsed end-to-end
+metrics. The report prints the per-seed table (parent / change per
+metric), then each side's share of failed operations (`failed /
+attempted`, summed over the runs that reported them; a change whose
+share is higher than the parent's is marked `worse`), then per metric
+the medians, the parent's inter-quartile range, how many pairs the
+change read lower, and a verdict against the metric's bound in
+BENCHMARK.json:
 
 - `worse than bound`: the change's median is worse than the parent's by
   more than the bound (relative to the parent's median);
@@ -80,12 +84,18 @@ def run_once(side, checkout, workload, seed, seconds):
            "--seconds", str(seconds), "--trace", "0"]
     t0 = time.time()
     p = subprocess.run(cmd, cwd=checkout, capture_output=True, text=True)
+    return record(side, workload, seed, p, time.time() - t0)
+
+
+def record(side, workload, seed, p, wall_s):
+    """The log record of one finished run `p` (returncode, stdout, stderr)."""
     last, res = parse_result(p.stdout)
     jvm = JVM_RE.findall(p.stderr)
     rec = {"side": side, "workload": workload, "seed": seed, "exit": p.returncode,
-           "last_line": last, "wall_s": round(time.time() - t0, 1),
+           "last_line": last, "wall_s": round(wall_s, 1),
            "jvm_s": float(jvm[-1]) if jvm else None,
            "failed": res.get("failed") if res else None,
+           "attempted": res.get("attempted") if res else None,
            "metrics": {k: v["value"] for k, v in res["metrics"].items()} if res else None}
     if res is None or p.returncode != 0:
         rec["stderr_tail"] = p.stderr.splitlines()[-5:]
@@ -101,6 +111,23 @@ def quartiles(xs):
         return xs[0], xs[0]
     q = statistics.quantiles(xs, n=4, method="inclusive")
     return q[0], q[2]
+
+
+def failed_share(runs):
+    """(failed, attempted) summed over the runs that reported both."""
+    counted = [r for r in runs if r.get("failed") is not None and r.get("attempted") is not None]
+    return sum(r["failed"] for r in counted), sum(r["attempted"] for r in counted)
+
+
+def share_line(runs):
+    """The summary line of both sides' failed-operation shares."""
+    def side(name):
+        failed, attempted = failed_share([r for r in runs if r["side"] == name])
+        return failed, attempted, f"{name} {failed}/{attempted} ({100.0 * failed / max(1, attempted):.2f}%)"
+    pf, pa, ptext = side("parent")
+    cf, ca, ctext = side("change")
+    worse = cf * max(1, pa) > pf * max(1, ca)
+    return f"- failed / attempted: {ptext}, {ctext}: " + ("worse" if worse else "not worse")
 
 
 def verdict(parent, change, bound, better):
@@ -163,6 +190,7 @@ def report(records, spec, out=sys.stdout):
         print(f"\n{len(pairs)} pairs, {len(runs)} runs, {len(bad)} not successful"
               + "".join(f"; {r['side']} seed {r['seed']} exit {r['exit']}: {r['last_line'][:120]}"
                         for r in bad), file=out)
+        print(share_line(runs), file=out)
         for m in metrics:
             name = m["name"]
             good = [(p, c) for p, c in pairs if ok(p) and ok(c)]
@@ -200,9 +228,10 @@ def selftest():
     assert verdict([10.0, 10.0], [8.0, 8.0], 0.3, "higher") == "within bound"
     assert verdict([], [1.0], 0.25, "lower") == "unresolved"
 
-    def rec(side, seed, order, warm, rss, exit_=0, failed=0):
+    def rec(side, seed, order, warm, rss, exit_=0, failed=0, attempted=100):
         return {"side": side, "workload": "w", "seed": seed, "order": order, "exit": exit_,
-                "last_line": "", "jvm_s": 30.0, "failed": failed,
+                "last_line": "", "jvm_s": 30.0, "failed": None if exit_ else failed,
+                "attempted": None if exit_ else attempted,
                 "metrics": None if exit_ else {"warm_s": warm, "peak_rss_mb": rss}}
     records = [rec("parent", 1, 0, 2.0, 1400), rec("change", 1, 1, 1.9, 1410),
                rec("change", 2, 2, 2.1, 1390), rec("parent", 2, 3, 2.2, 1420),
@@ -216,6 +245,19 @@ def selftest():
     assert "| 3 | parent first | exit 1 / 2.00 |" in text, text
     assert "3 pairs, 6 runs, 1 not successful" in text, text
     assert "- warm_s: median 2.100 -> 2.000 (-4.8%), parent IQR 0.100, change lower 2/2" in text, text
+    # failed shares: the crashed run reports no counts and adds to neither sum
+    assert "- failed / attempted: parent 0/200 (0.00%), change 0/300 (0.00%): not worse" in text, text
+    assert share_line([rec("parent", 1, 0, 2.0, 1400, failed=1, attempted=100),
+                       rec("change", 1, 1, 2.0, 1400, failed=2, attempted=100)]) == \
+        "- failed / attempted: parent 1/100 (1.00%), change 2/100 (2.00%): worse"
+    assert share_line([rec("parent", 1, 0, 2.0, 1400, failed=1, attempted=100),
+                       rec("change", 1, 1, 2.0, 1400, failed=2, attempted=400)]).endswith(": not worse")
+    # the run record keeps attempted next to failed
+    from types import SimpleNamespace
+    r = record("change", "w", 1, SimpleNamespace(returncode=0, stdout=line + "\n", stderr="jvm 31.5s"), 40.0)
+    assert (r["failed"], r["attempted"], r["jvm_s"], r["metrics"]["warm_s"]) == (0, 3, 31.5, 2.0), r
+    r = record("change", "w", 1, SimpleNamespace(returncode=1, stdout="", stderr="boom"), 1.0)
+    assert (r["failed"], r["attempted"], r["metrics"], r["stderr_tail"]) == (None, None, None, ["boom"]), r
     print("abpairs selftest ok")
 
 
